@@ -64,37 +64,12 @@ def _path(url: Column) -> Column:
     return F.regexp_extract(_strip_query_fragment(url), _SCHEME_RE + r"[^/?#]*(/.*)?$", 2)
 
 
-# already-canonical guard: a URL matching this is PROVABLY a fixed point of
-# canonicalize_url — lowercase scheme, lowercase port-less [a-z0-9.-] host,
-# non-empty path, no query/fragment, no whitespace (so trim is a no-op and
-# every lowering/stripping step returns the input unchanged). Anything not
-# matching falls through to the full normalization chain, so the fast path
-# can only ever return what the slow path would. Most links on a crawled
-# page are already canonical, and this turns their 20-regex chain into one
-# test (the link-admission stage's single biggest CPU item, guide §1.2).
-_CANONICAL_FIXED_POINT_RE = r"^https?://[a-z0-9.\-]+/[^?#\s]*$"
-
-
 def canonicalize_url(url: Column) -> Column:
     """normalize_url (web_visitor.rs:288-301) as one null-able expression.
 
     Returns NULL for non-http(s) or host-less values — callers filter on
     ``isNotNull`` exactly where the reference returns ``None``.
     """
-    import os
-
-    # The fixed-point fast path is provably exact (see the guard note and
-    # test_canonical_fast_path_equals_full_chain) but the interleaved warm
-    # crawl A/B could not show it paying for its extra guard regex on this
-    # workload, so it ships OFF; enable on link distributions where the
-    # full 20-expression chain dominates profile CPU.
-    if os.environ.get("SPARK_GRAFT_URL_FAST", "0") != "1":
-        return _canonicalize_url_full(url)
-    fast = url.rlike(_CANONICAL_FIXED_POINT_RE)
-    return F.when(fast, url).otherwise(_canonicalize_url_full(url))
-
-
-def _canonicalize_url_full(url: Column) -> Column:
     url = F.trim(url)  # Url::parse trims leading/trailing C0/space
     scheme = url_scheme(url)
     auth = F.lower(_authority(url))

@@ -334,7 +334,7 @@ def admit_links(
     # shuffles for them. (In THIS regime a merged single-relation variant
     # needs a pre-aggregation shuffle of the union — measured slower than
     # two direct broadcasts.) In the shuffle regime (huge rounds, see
-    # CrawlRunner.round_ctl_broadcast_rows) the economics invert: two
+    # crawl_plan.ROUND_CTL_BROADCAST_ROWS) the economics invert: two
     # sort-merge joins sort the much larger exploded-link side TWICE, so
     # there the a(t)/M(t) sides merge into one relation first and the link
     # side is shuffled+sorted once.
@@ -403,11 +403,7 @@ def admit_links(
         # times larger than the politeness-bounded ctl relation, and SMJ
         # would sort it; hashing the ctl side per partition skips that
         # sort entirely (guide §3.1 — build side bounded by the round)
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_CTL_SHJ", "1") == "1":
-            ctl = ctl.hint("shuffle_hash")
-        links = links.join(ctl, ["request_id", "url"], "left")
+        links = links.join(ctl.hint("shuffle_hash"), ["request_id", "url"], "left")
     # pass iff: (no admitted row OR (it popped earlier and was not visited))
     #       AND (no final mark at seq <= parent_seq)
     links = links.filter(

@@ -161,7 +161,6 @@ def robots_gate(
         rows = rows.withColumn("__rsalt", F.pmod(F.xxhash64("url"), F.lit(salt)))
     group_keys = ["origin", "__rsalt"] if salt > 1 else ["origin"]
     out_schema = StructType(rows.schema.fields + [StructField("robots_allowed_flag", BooleanType())])
-    row_cols = [f.name for f in rows.schema.fields]
 
     def check(key, pdf: pd.DataFrame) -> pd.DataFrame:
         body = pdf["__entry_body"].iloc[0]
@@ -190,65 +189,17 @@ def robots_gate(
         pdf["robots_allowed_flag"] = verdict
         return pdf.drop(columns=["__entry_body", "__allow_all"])
 
-    # Trivial-allow shortcut (guide §4.1 — don't ship rows to Python that a
-    # column expression can decide): an origin whose robots body contains no
-    # 'disallow' substring AT ALL cannot deny any path (robots defaults to
-    # allow; Allow rules only re-allow), and a NULL body resolves straight
-    # from allow_all. The verdict for those origins is a per-DIM-row
-    # expression; only rows of origins with a potentially-denying body go
-    # through the Arrow matcher. On permissive webs this removes the whole
-    # frontier-sized Python round trip.
-    import os
-
-    # Trivial-allow shortcut: correct (see below) and it removes the
-    # frontier-sized Arrow round trip on permissive webs, but the union
-    # layout re-evaluates the joined relation per branch per consumer and
-    # the interleaved warm A/B measured the net as neutral-to-negative
-    # here — ships OFF; enable for webs where the Python matcher dominates.
-    if os.environ.get("SPARK_GRAFT_ROBOTS_FAST", "0") != "1":
-        # plain single-branch layout (every row through the Arrow matcher)
-        dim0 = robots_dim.select(
-            "origin",
-            F.col("entry_body").alias("__entry_body"),
-            F.col("allow_all").alias("__allow_all"),
-        )
-        if broadcast:
-            dim0 = F.broadcast(dim0)
-        out = (
-            rows.join(dim0, "origin", "left")
-            .groupBy(*group_keys)
-            .applyInPandas(check, out_schema)
-        )
-        return out.drop("__rsalt") if salt > 1 else out
     dim = robots_dim.select(
         "origin",
         F.col("entry_body").alias("__entry_body"),
         F.col("allow_all").alias("__allow_all"),
-        F.when(
-            F.col("entry_body").isNull(),
-            F.coalesce(F.col("allow_all"), F.lit(True)),
-        )
-        .when(
-            ~F.lower(F.col("entry_body")).contains("disallow"), F.lit(True)
-        )
-        .alias("__triv"),
-        F.lit(True).alias("__has_dim"),
     )
     if broadcast:
         dim = F.broadcast(dim)
-    joined = rows.join(dim, "origin", "left")
-    # no dim row = 404 allow-all policy (robots.rs:108-114)
-    verdict = F.when(F.col("__has_dim").isNull(), F.lit(True)).otherwise(
-        F.col("__triv")
-    )
-    fast = joined.filter(verdict.isNotNull()).select(
-        *row_cols, verdict.alias("robots_allowed_flag")
-    )
-    slow = joined.filter(
-        F.col("__has_dim").isNotNull() & F.col("__triv").isNull()
-    ).drop("__triv", "__has_dim")
-    out = fast.unionByName(
-        slow.groupBy(*group_keys).applyInPandas(check, out_schema)
+    out = (
+        rows.join(dim, "origin", "left")
+        .groupBy(*group_keys)
+        .applyInPandas(check, out_schema)
     )
     return out.drop("__rsalt") if salt > 1 else out
 

@@ -23,6 +23,8 @@ sorted by (request_id, seq) equals the sequential oracle's visit order.
 
 from __future__ import annotations
 
+import threading
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -51,6 +53,15 @@ from ..operators.sitemaps import (  # noqa: E402 (single source for the caps)
     SITEMAP_MAX_DEPTH,
     SITEMAP_MAX_FILES,
 )
+
+# A round whose fold output has at most this many rows broadcasts its
+# control relations (crawled ids, a(t), M(t)) into the chunk and link joins,
+# so the heavy cached sides (extracted pages, outlink arrays) stay in place;
+# above it those joins shuffle on (request_id, seq) / (request_id, url).
+ROUND_CTL_BROADCAST_ROWS = 1_000_000
+# The robots dim broadcasts into the gate join up to this many rows; a
+# larger dim (10^8 origins is a table) is shuffle-joined on origin.
+ROBOTS_BROADCAST_ROWS = 1_000_000
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -169,25 +180,11 @@ class CrawlRunner:
         use_bloom: bool = True,
         bloom_min_rows: int = 5000,
         host_buckets: int = 32,
-        skew_salt: int | None = None,
-        broadcast_round_ctl: bool = True,
         robots_ttl_dynamic: bool = False,
         robots_source_fn=None,
         round_duration_secs: int = 16,
-        robots_broadcast_threshold: int = 1_000_000,
-        round_ctl_broadcast_rows: int = 1_000_000,
     ):
-        # broadcast_round_ctl: the per-round crawled-row id set
-        # (request_id, seq) is politeness-bounded (tokens_per_round x active
-        # hosts), so broadcasting it into the chunk/link joins lets the heavy
-        # cached sides (extracted pages, outlink arrays) stay in place
-        # instead of shuffling multi-GB rows. Right up to ~10^8-row rounds
-        # (~2 GB broadcast); set False beyond that to fall back to shuffle
-        # joins on (request_id, seq).
-        self.broadcast_round_ctl = broadcast_round_ctl
-        self.round_ctl_broadcast_rows = round_ctl_broadcast_rows
         self.bloom_min_rows = bloom_min_rows
-        self.skew_salt = skew_salt
         self.spark = spark
         self.catalog = Catalog(spark, workdir)
         # Partition the big web tables by url so every round's fetch join is
@@ -196,12 +193,9 @@ class CrawlRunner:
         # the sort-merge join's ordering requirement: InMemoryRelation
         # preserves outputOrdering, so every round's fetch join skips the
         # pages-side sort (bucketBy+sortBy amortized into the cache).
-        import os as _os
-
-        _p = pages.repartition(host_buckets, "url")
-        if _os.environ.get("SPARK_GRAFT_PAGES_SORT", "1") == "1":
-            _p = _p.sortWithinPartitions("url")
-        self.pages = _p.cache()
+        self.pages = (
+            pages.repartition(host_buckets, "url").sortWithinPartitions("url").cache()
+        )
         self.redirects = redirects
         self.has_redirects = not redirects.isEmpty()
         # chain bound: computed once here, makes every round's redirect hop
@@ -231,7 +225,6 @@ class CrawlRunner:
         self.robots_ttl_dynamic = robots_ttl_dynamic
         self.robots_source_fn = robots_source_fn or (lambda now: robots_pdf)
         self.round_duration_secs = round_duration_secs
-        self.robots_broadcast_threshold = robots_broadcast_threshold
         seed_source = self.robots_source_fn(0)
         if isinstance(seed_source, DataFrame):
             # DataFrame-native source (10^8 origins is a table, not a dim):
@@ -262,6 +255,10 @@ class CrawlRunner:
         self.t_metrics = self.catalog.table("metrics", METRICS_SCHEMA)
         self.t_chunks = self.catalog.table("chunks", CHUNKS_SCHEMA)
         self.t_lineage = self.catalog.table("lineage", LINEAGE_SCHEMA)
+        # lineage rows buffer here until _flush_lineage; the round's commit
+        # threads and the chunk sink append concurrently
+        self._lineage_lock = threading.Lock()
+        self._lineage_buf: list = []
         # Async chunk sink (vector upsert): the chunks table is a pure sink —
         # nothing in the crawl loop reads it — so its upsert (the round's
         # embedding UDF plus its biggest parquet write) runs on a dedicated
@@ -362,22 +359,9 @@ class CrawlRunner:
             self._sink_pool.shutdown(wait=True)
             self._sink_pool = None
         self._flush_lineage()
-        for df in (
-            self.pages,
-            self.budgets,
-            self.robots_dim,
-            self.image_stats,
-            self._requests_cache,
-        ):
-            try:
-                if df is not None:
-                    df.unpersist()
-            except Exception:
-                pass
-        # caches are released; the GC finalizer has nothing left to do
-        fin = getattr(self, "_cache_finalizer", None)
-        if fin is not None:
-            fin.detach()
+        # run the GC finalizer now: it frees _pinned_caches, and a finalizer
+        # runs at most once, so the GC has nothing left to do
+        self._cache_finalizer()
 
     def _requests_df(self) -> DataFrame:
         """The requests dim, cached across rounds (constant between admits)."""
@@ -388,6 +372,7 @@ class CrawlRunner:
 
     def _invalidate_requests(self) -> None:
         if self._requests_cache is not None:
+            self._pinned_caches.remove(self._requests_cache)
             try:
                 self._requests_cache.unpersist()
             except Exception:
@@ -734,7 +719,7 @@ class CrawlRunner:
         robots source with the policy table in COLUMN form — 2xx parse
         24 h / 4xx allow-all 24 h / 5xx stale-if-available else disallow
         5 min (robots.rs:100-134) — and commit the merged cache. The dim is
-        broadcast only under robots_broadcast_threshold rows; above it the
+        broadcast only up to ROBOTS_BROADCAST_ROWS rows; above it the
         gate join falls back to a shuffle join (10^8 origins is a table,
         not a dim).
         """
@@ -802,7 +787,7 @@ class CrawlRunner:
         )
         self.t_robots.commit(merged, mode="overwrite")
         dim = self.t_robots.read().select("origin", "entry_body", "allow_all")
-        return dim, self.t_robots.last_rows <= self.robots_broadcast_threshold
+        return dim, self.t_robots.last_rows <= ROBOTS_BROADCAST_ROWS
 
     # ------------------------------------------------------------------ round
     def run_round(self, round_no: int) -> int:
@@ -927,26 +912,13 @@ class CrawlRunner:
             ).select(
                 "request_id", "seq", "fetch_kind", "final_url",
                 "blocked_url", "outlinks", "image_id",
-            )
-            # OFF by default: the interleaved warm-run A/B measured the
-            # extra wide exchange+sort costing ~6-7 s/round more than its
-            # downstream savings on this topology (outlink arrays shuffle
-            # only once either way; the control joins move narrow columns).
-            # Kept as an env toggle for cluster topologies where repeated
-            # key-aligned consumers would repay the one-time layout.
-            if os.environ.get("SPARK_GRAFT_CACHE_LAYOUT", "0") == "1":
-                n_shuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-                fetched = fetched.repartition(
-                    n_shuf, "request_id", "seq"
-                ).sortWithinPartitions("request_id", "seq")
-            fetched = fetched.cache()
+            ).cache()
             round_caches.append(fetched)
             extracted = extract_pages(
                 fetched.filter(F.col("fetch_kind") == "ok").select(
                     "request_id", "seq", "final_url", "image_id"
                 ),
                 self.images,
-                skew_salt=self.skew_salt,
                 image_stats=self.image_stats,
             ).select("request_id", "seq", "chunks").cache()
             round_caches.append(extracted)
@@ -987,10 +959,7 @@ class CrawlRunner:
             # links/chunks joins fall back to shuffle joins, which the
             # canonicalize-barrier partitioning on (request_id, url) mostly
             # co-locates anyway.
-            round_bctl = (
-                self.broadcast_round_ctl
-                and fold_rows <= self.round_ctl_broadcast_rows
-            )
+            round_bctl = fold_rows <= ROUND_CTL_BROADCAST_ROWS
             if _profile:
                 print(
                     f"[round {round_no}] fold_rows={fold_rows}"
@@ -1237,13 +1206,7 @@ class CrawlRunner:
     def _lineage(self, round_no, name, snap, n):
         # buffered; one lineage commit per round (see _flush_lineage);
         # called from commit threads -> guard with a lock
-        import threading
-
-        if not hasattr(self, "_lineage_lock"):
-            self._lineage_lock = threading.Lock()
         with self._lineage_lock:
-            if not hasattr(self, "_lineage_buf"):
-                self._lineage_buf = []
             self._lineage_buf.append(
                 (round_no, name, snap, int(n), self.spark.sparkContext.defaultParallelism)
             )
@@ -1252,13 +1215,8 @@ class CrawlRunner:
         # the async chunk sink can append concurrently with a round's flush —
         # snapshot-and-clear under the same lock _lineage uses, then commit
         # outside it (a late row just rides the next flush)
-        import threading
-
-        if not hasattr(self, "_lineage_lock"):
-            self._lineage_lock = threading.Lock()
         with self._lineage_lock:
-            buf = getattr(self, "_lineage_buf", [])
-            self._lineage_buf = []
+            buf, self._lineage_buf = self._lineage_buf, []
         if buf:
             self.t_lineage.commit(self.spark.createDataFrame(buf, LINEAGE_SCHEMA))
 
@@ -1269,22 +1227,16 @@ def _host_of(url: str) -> str:
     return (urlsplit(url).hostname or "").lower()
 
 
-def _unpersist_quietly(dfs: list) -> None:
+def _release_runner_resources(dfs: list, state: dict) -> None:
     """weakref.finalize callback (module-level: must not capture the
-    runner): release whatever caches the runner still pins."""
+    runner), run by close() or by the GC for runners dropped without it:
+    free the pinned caches AND stop the async chunk-sink pool (a non-daemon
+    thread per runner otherwise outlives it)."""
     for df in dfs:
         try:
-            if df is not None:
-                df.unpersist()
+            df.unpersist()
         except Exception:
             pass
-
-
-def _release_runner_resources(dfs: list, state: dict) -> None:
-    """Finalizer for runners dropped without close(): free pinned caches
-    AND stop the async chunk-sink pool (a non-daemon thread per runner
-    otherwise outlives it)."""
-    _unpersist_quietly(dfs)
     pool = state.get("pool")
     if pool is not None:
         try:

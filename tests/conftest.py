@@ -11,10 +11,24 @@ def spark():
 
     # the suite runs hundreds of crawl rounds in ONE JVM; 8g sat at ~98%
     # heap by the time test_frontier's resume test ran (broadcast builds
-    # failed with "Not enough memory to build and broadcast") — the box has
-    # 128 GiB, so give the shared test JVM real headroom
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    s = get_spark("my_crawler_spark-tests", master="local[4]", shuffle_partitions=4)
+    # failed with "Not enough memory to build and broadcast"), so give the
+    # shared test JVM up to 16g — but at most half the host's RAM: a heap
+    # near the host's size lets the JVM grow until the kernel's OOM killer
+    # ends it, and every test after that fails
+    ram_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(16, -(-ram_mib // 2048))}g")
+    # the status store keeps every job, stage, task and SQL execution (with
+    # its plan) of the session on the driver heap, UI or not; nothing in the
+    # suite reads that history, so keep only a short tail of it
+    s = get_spark(
+        "my_crawler_spark-tests", master="local[4]", shuffle_partitions=4,
+        extra_conf={
+            "spark.sql.ui.retainedExecutions": "50",
+            "spark.ui.retainedJobs": "100",
+            "spark.ui.retainedStages": "100",
+            "spark.ui.retainedTasks": "10000",
+        },
+    )
     yield s
 
 

@@ -152,33 +152,60 @@ def test_skew_salted_extract_equals_plain(spark, fixtures):
     assert all(r.phash_ok for r in plain)
 
 
-def test_admit_links_broadcasts_round_control(spark):
-    """With broadcast_ctl, the a(t)/M(t) probes must be BroadcastHashJoins —
-    the (politeness-bounded) fold output broadcasts and the exploded-link
-    side never shuffles for them."""
-    from my_crawler_spark.operators.frontier import FOLD_OUT_SCHEMA, admit_links
+def _admit_links_inputs(spark):
+    """One crawled parent (seq 2) linking to two fresh urls, to itself
+    (dropped by its a(t) row) and to y, which the seq-1 row already reached
+    as a final url (dropped by M(t))."""
+    from my_crawler_spark.operators.frontier import FOLD_OUT_SCHEMA
 
+    h = "https://h.example.com"
     crawled = spark.createDataFrame(
-        [(1, 2, 1, ["https://h.example.com/a", "https://h.example.com/b"])],
+        [(1, 2, 1, [f"{h}/a", f"{h}/b", f"{h}/x", f"{h}/y"])],
         "request_id long, seq long, depth int, outlinks array<string>",
     )
     fold_out = spark.createDataFrame(
-        [(1, 2, "https://h.example.com/x", 1, "crawled",
-          "https://h.example.com/x", True, True, None, True, True, False)],
+        [(1, 1, f"{h}/w", 1, "crawled", f"{h}/y", True, True, None, True, True, False),
+         (1, 2, f"{h}/x", 1, "crawled", f"{h}/x", True, True, None, True, True, False)],
         FOLD_OUT_SCHEMA,
     )
     deferred = spark.createDataFrame([], "request_id long, url string, host string, depth int, seq long")
     seen = spark.createDataFrame([], "request_id long, url string")
     requests = spark.createDataFrame(
-        [(1, "https://h.example.com/x", "https://h.example.com", 10, 5, False)],
+        [(1, f"{h}/x", h, 10, 5, False)],
         "request_id long, seed_url string, seed_origin string, max_pages int, "
         "max_depth int, same_domain boolean",
     )
-    out = admit_links(crawled, fold_out, deferred, seen, requests, spark,
+    return crawled, fold_out, deferred, seen, requests
+
+
+def test_admit_links_broadcasts_round_control(spark):
+    """With broadcast_ctl, the a(t)/M(t) probes must be BroadcastHashJoins —
+    the (politeness-bounded) fold output broadcasts and the exploded-link
+    side never shuffles for them."""
+    from my_crawler_spark.operators.frontier import admit_links
+
+    out = admit_links(*_admit_links_inputs(spark), spark,
                       bloom=None, broadcast_ctl=True)
     plan = explain_str(out)
     # requests dim + a(t) + M(t) probes — at least three broadcast joins
     assert plan.count("BroadcastHashJoin") >= 3, plan
+
+
+def test_admit_links_shuffle_regime_equals_broadcast(spark):
+    """Without broadcast_ctl (rounds past ROUND_CTL_BROADCAST_ROWS) the merged
+    a(t)/M(t) control relation joins as a ShuffledHashJoin, and the admitted
+    links are exactly the broadcast regime's."""
+    from my_crawler_spark.operators.frontier import admit_links
+
+    inputs = _admit_links_inputs(spark)
+    bcast = admit_links(*inputs, spark, bloom=None, broadcast_ctl=True)
+    shuf = admit_links(*inputs, spark, bloom=None, broadcast_ctl=False)
+    assert "ShuffledHashJoin" in explain_str(shuf)
+    rows = sorted(map(tuple, shuf.collect()))
+    assert rows == sorted(map(tuple, bcast.collect()))
+    assert [r.url for r in shuf.orderBy("url").collect()] == [
+        "https://h.example.com/a", "https://h.example.com/b",
+    ]
 
 
 def test_hamming_near_pairs_single_upstream_pass(spark):

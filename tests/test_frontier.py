@@ -224,6 +224,25 @@ def _mini_retry_fixtures(flaky: int, retry_after: int):
     }
 
 
+def test_first_round_lineage_and_pinned_caches(crawl):
+    """Round 1's concurrent commit threads and chunk sink each leave exactly
+    one lineage row per table, and re-admitting swaps the cached requests
+    dim instead of stacking stale handles on the runner's pinned list."""
+    runner, _ = crawl
+    names = [
+        r.table for r in runner.t_lineage.read().filter(F.col("round") == 1).collect()
+    ]
+    assert sorted(names) == sorted([
+        "url_seen", "blocked_origins", "visit_log", "metrics",
+        "frontier", "request_state", "chunks",
+    ])
+    pinned = len(runner._pinned_caches)
+    for _ in range(3):
+        runner._invalidate_requests()
+        runner._requests_df()
+    assert len(runner._pinned_caches) == pinned
+
+
 def test_retry_tokens_delay_host_pacing(spark, tmp_path):
     """S2 per-attempt politeness: a flaky page (2 retries, Retry-After 8 s)
     costs 3 attempts + 8 delay-tokens, so its host's later URLs slip to a

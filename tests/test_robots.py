@@ -359,14 +359,10 @@ def test_empty_pandas_robots_source_has_schema(spark, tmp_path):
         runner.close()
 
 
-def test_robots_gate_trivial_allow_fast_path_equals_plain(spark):
-    """The env-gated trivial-allow shortcut (SPARK_GRAFT_ROBOTS_FAST=1)
-    must produce exactly the plain Arrow-matcher verdicts on a dim mixing
-    NULL bodies, allow-only bodies, disallow bodies, and missing origins."""
-    import os
-
-    from pyspark.sql import functions as F
-
+def test_robots_gate_mixed_dim_verdicts(spark):
+    """One gate pass over a dim mixing NULL bodies, allow-only bodies,
+    disallow bodies and a missing origin yields a verdict for every row,
+    each the policy's own."""
     from my_crawler_spark.operators.politeness import robots_gate
 
     rows = spark.createDataFrame(
@@ -387,24 +383,15 @@ def test_robots_gate_trivial_allow_fast_path_equals_plain(spark):
         ],
         "origin string, entry_body string, allow_all boolean",
     )
-
-    def verdicts():
-        return {
-            (r.origin, r.url): r.robots_allowed_flag
-            for r in robots_gate(rows, dim).collect()
-        }
-
-    os.environ["SPARK_GRAFT_ROBOTS_FAST"] = "1"
-    try:
-        fast = verdicts()
-    finally:
-        os.environ.pop("SPARK_GRAFT_ROBOTS_FAST", None)
-    plain = verdicts()
-    assert fast == plain
-    assert len(fast) == 200
-    # sanity: the disallow body actually denies something (h3's urls are
-    # p3, p8, p13, ... — /p13 prefix-matches Disallow /p1), an allowed h3
-    # url exists, and h2 (null body, allow_all=False) denies all
-    assert not plain[("https://h3.example.com", "https://h3.example.com/p13")]
-    assert plain[("https://h3.example.com", "https://h3.example.com/p3")]
-    assert not plain[("https://h2.example.com", "https://h2.example.com/p2")]
+    got = {
+        (r.origin, r.url): r.robots_allowed_flag
+        for r in robots_gate(rows, dim).collect()
+    }
+    assert len(got) == 200
+    # the disallow body denies something (h3's urls are p3, p8, p13, ... —
+    # /p13 prefix-matches Disallow /p1), an allowed h3 url exists, h2 (null
+    # body, allow_all=False) denies all, and h4 (no dim row) allows all
+    assert not got[("https://h3.example.com", "https://h3.example.com/p13")]
+    assert got[("https://h3.example.com", "https://h3.example.com/p3")]
+    assert not got[("https://h2.example.com", "https://h2.example.com/p2")]
+    assert all(v for (o, _), v in got.items() if o == "https://h4.example.com")

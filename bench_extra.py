@@ -10,7 +10,7 @@ Usage:
   python bench_extra.py --noop             # add noop-sink timing
   python bench_extra.py --plans plans/r06 --suffix before   # dump explains
   python bench_extra.py --queries bm25_topk,semdedup        # subset
-  python bench_extra.py --crawl            # one profiled crawl run
+  python bench_extra.py --crawl            # one timed crawl run
   python bench_extra.py --repeat 3         # repeat timings
 """
 
@@ -55,7 +55,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     if "--crawl" in args:
-        os.environ["SPARK_GRAFT_PROFILE"] = "1"
         import bench as B
 
         t0 = time.time()

@@ -30,13 +30,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..functions.robots import origin_allowed, select_group_rules
 
@@ -101,8 +95,7 @@ def admit_prefix(frontier: DataFrame, budgets: DataFrame) -> DataFrame:
     (the 10^10-row table at scale), so a grouped-map pandas stage here would
     both ship the table through Arrow every round and materialize each
     (request, host) group as a single frame (a hot host with 10^7 queued
-    URLs = multi-GB in one task). ``admit_prefix_grouped_map`` keeps the
-    pandas implementation as a test twin.
+    URLs = multi-GB in one task).
     """
     ranked = _with_budget(frontier, budgets).withColumn(
         "host_rank",
@@ -114,23 +107,6 @@ def admit_prefix(frontier: DataFrame, budgets: DataFrame) -> DataFrame:
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    return _admitted_from_ranked(ranked)
-
-
-def admit_prefix_grouped_map(frontier: DataFrame, budgets: DataFrame) -> DataFrame:
-    """Grouped-map twin of :func:`admit_prefix` (the round-2 implementation)
-    kept for equivalence testing — not on the hot path."""
-    with_budget = _with_budget(frontier, budgets)
-    rank_schema = StructType(
-        with_budget.schema.fields + [StructField("host_rank", LongType())]
-    )
-
-    def rank_host(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("seq").copy()
-        pdf["host_rank"] = (pdf["token_cost"] * pdf["fetchable"]).cumsum()
-        return pdf
-
-    ranked = with_budget.groupBy("request_id", "host").applyInPandas(rank_host, rank_schema)
     return _admitted_from_ranked(ranked)
 
 

@@ -79,23 +79,6 @@ def py_discover_sitemap_pages(sm, seed: str, declared, max_pages: int) -> list[s
     return out
 
 
-def robots_sitemaps_col(body) -> F.Column:
-    """Columnar twin of functions.robots.robots_sitemaps: the ordered
-    ``Sitemap:`` directive values from a robots.txt body column — per line,
-    comments stripped, key matched case-insensitively before the first
-    colon, value trimmed, empties dropped. NULL body -> empty array."""
-    lines = F.split(F.coalesce(body, F.lit("")), "\n")
-    vals = F.transform(
-        lines,
-        lambda ln: F.trim(
-            F.regexp_extract(
-                F.regexp_replace(ln, "#.*", ""), r"(?i)^\s*sitemap\s*:(.*)$", 1
-            )
-        ),
-    )
-    return F.filter(vals, lambda v: v != "")
-
-
 def sitemap_bulk_discover(
     requests: DataFrame,
     sitemaps: DataFrame,

@@ -26,18 +26,16 @@ from __future__ import annotations
 import threading
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.robots import policy_for_status, robots_sitemaps
 from ..functions.url import (
-    canonicalize_url,
     is_crawl_trap,
     py_canonicalize_url,
     py_is_crawl_trap,
     py_origin,
-    py_same_origin,
     url_host,
     url_origin,
 )
@@ -268,8 +266,7 @@ class CrawlRunner:
         # parallel-scaling ceiling (BENCH/BASELINE.md), and hiding it behind
         # compute is the same async-sink-flush shape a cluster engine uses.
         # run()/close() drain, so every external reader of t_chunks sees a
-        # complete table; SPARK_GRAFT_ASYNC_CHUNKS=0 restores the
-        # synchronous per-round commit.
+        # complete table.
         self._sink_pool = None
         self._pending_chunks = None
         self._deferred_caches: list = []
@@ -450,120 +447,11 @@ class CrawlRunner:
             state_rows.append((int(s.request_id), 0, seq))
         self.t_requests.commit(self.spark.createDataFrame(req_rows, REQUESTS_SCHEMA))
         self._invalidate_requests()
-        self.t_frontier.commit(
-            self.spark.createDataFrame(frontier_rows, FRONTIER_SCHEMA), mode="overwrite"
-        )
-        self.t_state.commit(self.spark.createDataFrame(state_rows, STATE_SCHEMA), mode="overwrite")
+        # append, like seed_frontier_bulk_many: requests admitted earlier
+        # keep their queued frontier and their state
+        self.t_frontier.commit(self.spark.createDataFrame(frontier_rows, FRONTIER_SCHEMA))
+        self.t_state.commit(self.spark.createDataFrame(state_rows, STATE_SCHEMA))
         return accepted
-
-    def admit_requests_bulk(self, seeds: DataFrame, sitemaps: DataFrame | None = None) -> list[int]:
-        """admit_requests for a FLEET: the whole seed batch — canonical
-        gate, robots check, declared-sitemap extraction, and the per-request
-        sitemap BFS — as one declarative plan (operators/sitemaps.py::
-        sitemap_bulk_discover), with no per-seed driver loop. Same tables,
-        same rows, same seqs as the sequential path (tests assert exact
-        equality); the driver only collects the bounded accepted-id list.
-
-        seeds: (request_id, url, max_pages, max_depth, same_domain[,
-        use_browser]). sitemaps: the parsed (sitemap_url, kind, loc,
-        lastmod) relation — defaults to the runner's dim."""
-        from ..operators.sitemaps import robots_sitemaps_col, sitemap_bulk_discover
-
-        if sitemaps is None:
-            sitemaps = self.spark.createDataFrame(
-                self.sitemaps_pdf[["sitemap_url", "kind", "loc", "lastmod"]]
-            )
-        s = seeds
-        if "use_browser" not in s.columns:
-            s = s.withColumn("use_browser", F.lit(False))
-        canon = (
-            s.withColumn("seed", canonicalize_url(F.col("url")))
-            .filter(F.col("seed").isNotNull() & ~is_crawl_trap(F.col("seed")))
-            .withColumn("origin", url_origin(F.col("seed")))
-            .select(
-                "request_id", "seed", "origin", "max_pages", "max_depth",
-                "same_domain", "use_browser",
-            )
-        ).persist()
-        try:
-            req_rows = canon.select(
-                F.col("request_id").cast("long"),
-                F.col("seed").alias("seed_url"),
-                F.col("origin").alias("seed_origin"),
-                F.col("max_pages").cast("int"),
-                F.col("max_depth").cast("int"),
-                F.col("same_domain").cast("boolean"),
-                F.col("use_browser").cast("boolean"),
-            )
-            self.t_requests.commit(req_rows)
-            self._invalidate_requests()
-
-            # robots gate on the SEED url decides sitemap seeding only — the
-            # seed itself always enters the frontier (the fetch-time gate
-            # re-checks), exactly as the sequential path
-            gated = robots_gate(
-                canon.select("request_id", "origin", F.col("seed").alias("url"), "max_pages"),
-                self.robots_dim,
-                salt=1,
-            )
-            dim = self.robots_dim.select("origin", "entry_body")
-            discover_reqs = (
-                gated.filter(F.col("robots_allowed_flag"))
-                .join(F.broadcast(dim), "origin", "left")
-                .select(
-                    "request_id",
-                    F.col("url").alias("seed"),
-                    robots_sitemaps_col(F.col("entry_body")).alias("declared"),
-                    "max_pages",
-                )
-            )
-            pages = sitemap_bulk_discover(discover_reqs, sitemaps)
-            sm_rows = (
-                pages.join(
-                    canon.select("request_id", "seed"), "request_id"
-                )
-                .filter(~is_crawl_trap(F.col("page_url")) & (F.col("page_url") != F.col("seed")))
-                .withColumn(
-                    "seq2",
-                    F.row_number().over(
-                        Window.partitionBy("request_id").orderBy("seq")
-                    )
-                    + F.lit(1),
-                )
-                .select(
-                    F.col("request_id").cast("long"),
-                    F.col("page_url").alias("url"),
-                    url_host(F.col("page_url")).alias("host"),
-                    F.lit(1).alias("depth"),
-                    F.col("seq2").cast("long").alias("seq"),
-                )
-            )
-            seed_rows = canon.select(
-                F.col("request_id").cast("long"),
-                F.col("seed").alias("url"),
-                url_host(F.col("seed")).alias("host"),
-                F.lit(0).alias("depth"),
-                F.lit(1).cast("long").alias("seq"),
-            )
-            frontier = seed_rows.unionByName(sm_rows).select(
-                F.col("request_id").cast("long"),
-                "url",
-                "host",
-                F.col("depth").cast("int"),
-                F.col("seq").cast("long"),
-            )
-            frontier.persist()
-            self.t_frontier.commit(frontier, mode="overwrite")
-            state = frontier.groupBy("request_id").agg(F.max("seq").alias("max_seq")).select(
-                "request_id",
-                F.lit(0).cast("long").alias("crawled_so_far"),
-                F.col("max_seq").cast("long"),
-            )
-            self.t_state.commit(state, mode="overwrite")
-            frontier.unpersist()
-            return sorted(r.request_id for r in canon.select("request_id").collect())
-        finally:
-            canon.unpersist()
 
     @staticmethod
     def _bulk_seed_rows(urls: DataFrame) -> DataFrame:
@@ -574,9 +462,7 @@ class CrawlRunner:
         groupBy(min) joined back as a broadcast dim. The previous
         row_number() over Window.partitionBy(request_id) colocated each
         request's whole frontier in one task — exactly the 10^10-single-
-        frontier degenerate shape BASELINE.json warns about (and the
-        unpartitioned-Window variant in seed_frontier_bulk was worse: the
-        ENTIRE bulk through one task). The returned DataFrame carries the
+        frontier degenerate shape BASELINE.json warns about. The returned DataFrame carries the
         range-partition cache handle as `_graft_persisted` — callers
         unpersist after committing."""
         from ..operators.ranking import global_rank
@@ -596,35 +482,6 @@ class CrawlRunner:
         )
         rows._graft_persisted = ranked._graft_persisted
         return rows
-
-    def seed_frontier_bulk(self, request_id: int, urls: DataFrame,
-                           max_pages: int, max_depth: int = 10,
-                           same_domain: bool = False) -> None:
-        """Bulk-inject a large seed frontier for one request (the 10^10-URL
-        seed-frontier shape from BASELINE.json): urls(url:string) -> frontier
-        rows with seqs assigned by url order. Used by bench + resume tooling."""
-        rows = self._bulk_seed_rows(
-            urls.select("url").withColumn(
-                "request_id", F.lit(request_id).cast("long")
-            )
-        )
-        try:
-            first_url = rows.filter(F.col("seq") == 1).collect()[0].url
-            n = rows.count()
-            self.t_requests.commit(
-                self.spark.createDataFrame(
-                    [(request_id, first_url, py_origin(first_url), max_pages,
-                      max_depth, same_domain, False)],
-                    REQUESTS_SCHEMA,
-                )
-            )
-            self._invalidate_requests()
-            self.t_frontier.commit(rows, mode="append")
-            self.t_state.commit(
-                self.spark.createDataFrame([(request_id, 0, n)], STATE_SCHEMA)
-            )
-        finally:
-            rows._graft_persisted.unpersist()
 
     def seed_frontier_bulk_many(
         self, requests: list[tuple[int, str, int, int, bool]], urls: DataFrame
@@ -792,23 +649,9 @@ class CrawlRunner:
     # ------------------------------------------------------------------ round
     def run_round(self, round_no: int) -> int:
         """One BSP superstep. Returns number of frontier rows remaining."""
-        import os
-        import time as _time
-
-        _profile = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-        _t0 = _time.time()
-
-        def _mark(label):
-            nonlocal _t0
-            if _profile:
-                now = _time.time()
-                print(f"[round {round_no}] {label}: {now - _t0:.2f}s", flush=True)
-                _t0 = now
-
         if self.t_frontier.count_rows() == 0:
             return 0
         frontier = self.t_frontier.read()
-        _mark("read_frontier")
         spark = self.spark
         seen = self.t_seen.read()
         # seen-set size for bloom sizing: tracked driver-side from commit
@@ -944,7 +787,6 @@ class CrawlRunner:
                     F.coalesce(is_crawl_trap(F.col("final_url")), F.lit(False)),
                 )
             )
-            _mark("plan_assembled")
             fold_out = gate_fold(control.select(*FOLD_IN_COLS)).cache()
             round_caches.append(fold_out)
             fold_rows = fold_out.count()
@@ -960,16 +802,9 @@ class CrawlRunner:
             # canonicalize-barrier partitioning on (request_id, url) mostly
             # co-locates anyway.
             round_bctl = fold_rows <= ROUND_CTL_BROADCAST_ROWS
-            if _profile:
-                print(
-                    f"[round {round_no}] fold_rows={fold_rows}"
-                    f" round_ctl_broadcast={round_bctl}",
-                    flush=True,
-                )
             for hc in hop_caches:  # fetched is materialized; free the hop caches
                 hc.unpersist()
             hop_caches.clear()
-            _mark("fold_executed")
 
             # ---- commits (independent tables -> concurrent driver threads;
             # Spark schedules the jobs in parallel, overlapping their fixed
@@ -1035,9 +870,6 @@ class CrawlRunner:
                 crawled_ids = F.broadcast(crawled_ids)
 
             def job_chunks():
-                import time as _t
-
-                t0 = _t.time()
                 # broadcast id-join: the heavy extracted rows (chunk text)
                 # never shuffle. No persist: the merge's matched-keys branch
                 # prunes down to source_url, so recomputing it skips the
@@ -1048,30 +880,15 @@ class CrawlRunner:
                     extracted.join(crawled_ids, ["request_id", "seq"])
                 ).select(*[f.name for f in CHUNKS_SCHEMA])
                 snap = upsert_chunks_with_stale_delete(self.t_chunks, chunks)
-                if _profile:
-                    print(
-                        f"[round {round_no}] commit chunks: {_t.time() - t0:.2f}s"
-                        f" ({self.t_chunks.last_rows} rows)",
-                        flush=True,
-                    )
                 self._lineage(round_no, "chunks", snap, self.t_chunks.last_rows)
 
             # the link/frontier pipeline needs only fold_out + round-start seen,
             # so it overlaps with the table commits in the same pool
             def job_frontier():
-                import time as _t
-
                 bloom = None
                 if self.use_bloom and seen_rows >= self.bloom_min_rows:
                     # below the threshold a plain anti-join beats two extra jobs
-                    t0 = _t.time()
                     bloom = bloom_mod.build_bloom(seen, "url", expected_n=seen_rows)
-                    if _profile:
-                        print(
-                            f"[round {round_no}] bloom build: {_t.time() - t0:.2f}s"
-                            f" ({seen_rows} keys)",
-                            flush=True,
-                        )
                 # broadcast the narrow crawled ids; the outlink arrays (the
                 # heavy side, from the fetched cache) stay un-shuffled
                 lp = crawled_rows.select("request_id", "seq", "depth")
@@ -1098,10 +915,8 @@ class CrawlRunner:
                 )
                 return nfr
 
-            overlap_frontier = os.environ.get("SPARK_GRAFT_OVERLAP_FRONTIER", "1") == "1"
-            async_chunks = os.environ.get("SPARK_GRAFT_ASYNC_CHUNKS", "1") == "1"
             with _fut.ThreadPoolExecutor(max_workers=6) as pool:
-                fut_frontier = pool.submit(job_frontier) if overlap_frontier else None
+                fut_frontier = pool.submit(job_frontier)
                 jobs = [
                     pool.submit(self._commit, round_no, "url_seen", self.t_seen, marks),
                     pool.submit(
@@ -1111,31 +926,24 @@ class CrawlRunner:
                     pool.submit(self._commit, round_no, "visit_log", self.t_visits, visits),
                     pool.submit(self._commit, round_no, "metrics", self.t_metrics, metrics),
                 ]
-                if async_chunks:
-                    # join the PREVIOUS round's chunk write (it has been
-                    # overlapping this round's fold), hand its pinned caches
-                    # back, then launch this round's write to overlap the
-                    # NEXT round. The one-thread pool serializes upserts on
-                    # t_chunks.
-                    self._drain_chunks()
-                    for df in (extracted, fold_out):
-                        round_caches.remove(df)
-                        self._deferred_caches.append(df)
-                    if self._sink_pool is None:
-                        self._sink_pool = _fut.ThreadPoolExecutor(
-                            max_workers=1, thread_name_prefix="chunk-sink"
-                        )
-                        self._finalizer_state["pool"] = self._sink_pool
-                    self._pending_chunks = self._sink_pool.submit(job_chunks)
-                else:
-                    jobs.append(pool.submit(job_chunks))
+                # join the PREVIOUS round's chunk write (it has been
+                # overlapping this round's fold), hand its pinned caches
+                # back, then launch this round's write to overlap the NEXT
+                # round. The one-thread pool serializes upserts on t_chunks.
+                self._drain_chunks()
+                for df in (extracted, fold_out):
+                    round_caches.remove(df)
+                    self._deferred_caches.append(df)
+                if self._sink_pool is None:
+                    self._sink_pool = _fut.ThreadPoolExecutor(
+                        max_workers=1, thread_name_prefix="chunk-sink"
+                    )
+                    self._finalizer_state["pool"] = self._sink_pool
+                self._pending_chunks = self._sink_pool.submit(job_chunks)
                 for j in jobs:
                     j.result()
-                new_frontier_rows = fut_frontier.result() if fut_frontier else None
-            if new_frontier_rows is None:
-                new_frontier_rows = job_frontier()
+                new_frontier_rows = fut_frontier.result()
             self._seen_rows = seen_rows + self.t_seen.last_rows
-            _mark("commits_and_frontier")
 
             new_state = (
                 state.join(
@@ -1156,7 +964,6 @@ class CrawlRunner:
                 .drop("__ms")
             )
             self._commit(round_no, "request_state", self.t_state, new_state, mode="overwrite")
-            _mark("commit_state")
 
             self._flush_lineage()
             # remaining = the frontier overwrite's own footer count — no re-read
@@ -1190,17 +997,7 @@ class CrawlRunner:
     # ------------------------------------------------------------------ misc
     def _commit(self, round_no, name, table, df, mode="append"):
         # one Spark action (the write); row count from the parquet footers
-        import os as _os
-        import time as _t
-
-        t0 = _t.time()
         snap = table.commit(df, mode=mode)
-        if _os.environ.get("SPARK_GRAFT_PROFILE") == "1":
-            print(
-                f"[round {round_no}] commit {name}: {_t.time() - t0:.2f}s"
-                f" ({table.last_rows} rows)",
-                flush=True,
-            )
         self._lineage(round_no, name, snap, table.last_rows)
 
     def _lineage(self, round_no, name, snap, n):

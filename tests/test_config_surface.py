@@ -1,6 +1,7 @@
-"""The library's configuration surface: the environment variables it reads
-and the crawl runner's constructor options. A new default-off toggle fails
-here instead of slipping in unmeasured."""
+"""The library's configuration surface: the environment variables it reads,
+the crawl runner's constructor options and its admission methods. A new
+default-off toggle or a second admission path fails here instead of
+slipping in unmeasured."""
 
 from __future__ import annotations
 
@@ -17,9 +18,6 @@ ALLOWED_ENV = {
     "SPARK_GRAFT_DRIVER_MEM",
     "SPARK_GRAFT_UI",
     "SPARK_GRAFT_MOR_COMPACT",
-    "SPARK_GRAFT_PROFILE",
-    "SPARK_GRAFT_OVERLAP_FRONTIER",
-    "SPARK_GRAFT_ASYNC_CHUNKS",
 }
 
 
@@ -41,3 +39,13 @@ def test_runner_has_no_single_value_options():
         "broadcast_round_ctl", "round_ctl_broadcast_rows",
         "robots_broadcast_threshold", "skew_salt",
     }
+
+
+def test_runner_has_one_admission_path_per_shape():
+    """Requests enter through admit_requests (per-seed, with sitemap
+    seeding) or seed_frontier_bulk_many (a fleet's prebuilt seed frontier);
+    no second path writes the same tables."""
+    assert not hasattr(CrawlRunner, "admit_requests_bulk")
+    assert not hasattr(CrawlRunner, "seed_frontier_bulk")
+    assert hasattr(CrawlRunner, "admit_requests")
+    assert hasattr(CrawlRunner, "seed_frontier_bulk_many")

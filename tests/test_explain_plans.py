@@ -94,14 +94,20 @@ def test_admit_prefix_has_no_python_stage(spark, fixtures):
         assert node not in plan, f"python stage {node} in admission plan:\n{plan}"
 
 
-def test_admit_prefix_window_equals_grouped_map(spark, fixtures):
-    """The native-window admission must decide exactly like the grouped-map
-    twin on a frontier with mixed hosts, costs, and fetchable flags."""
+def test_admit_prefix_window_equals_pandas_rule(spark, fixtures):
+    """The native-window admission must decide exactly like the stated rule,
+    recomputed in pandas, on a frontier with mixed hosts, costs, and
+    fetchable flags: a row is over budget when it is fetchable and its
+    (request, host) cumulative fetchable cost in seq order, minus its own
+    cost, reaches the host's budget; each request admits the rows before
+    its first over-budget row."""
     import random
 
+    import pandas as pd
+
     from my_crawler_spark.operators.politeness import (
+        DEFAULT_TOKENS_PER_ROUND,
         admit_prefix,
-        admit_prefix_grouped_map,
     )
 
     rng = random.Random(7)
@@ -118,16 +124,27 @@ def test_admit_prefix_window_equals_grouped_map(spark, fixtures):
         "request_id long, url string, host string, depth int, seq long, "
         "fetchable boolean, token_cost long",
     )
+    budget = {"h0.example.com": 3, "h1.example.com": 1, "h2.example.com": 8}
     budgets = spark.createDataFrame(
-        [("h0.example.com", 3), ("h1.example.com", 1), ("h2.example.com", 8)],
-        "host string, tokens_per_round int",
+        list(budget.items()), "host string, tokens_per_round int",
     )  # h3 missing -> default budget path
+
+    pdf = pd.DataFrame(
+        rows,
+        columns=["request_id", "url", "host", "depth", "seq", "fetchable", "token_cost"],
+    ).sort_values("seq")
+    pdf["cost"] = pdf["token_cost"] * pdf["fetchable"]
+    pdf["host_rank"] = pdf.groupby(["request_id", "host"])["cost"].cumsum()
+    pdf["budget"] = pdf["host"].map(budget).fillna(DEFAULT_TOKENS_PER_ROUND)
+    over = pdf[pdf["fetchable"] & (pdf["host_rank"] - pdf["token_cost"] >= pdf["budget"])]
+    cutoff = over.groupby("request_id")["seq"].min()
+    want = {
+        (r.request_id, r.seq): r.seq < cutoff.get(r.request_id, float("inf"))
+        for r in pdf.itertuples()
+    }
+
     key = lambda r: (r.request_id, r.seq)
     got = {key(r): r.admitted for r in admit_prefix(frontier, budgets).collect()}
-    want = {
-        key(r): r.admitted
-        for r in admit_prefix_grouped_map(frontier, budgets).collect()
-    }
     assert got == want
     assert len(got) == len(rows) and any(got.values()) and not all(got.values())
 

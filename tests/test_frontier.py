@@ -382,36 +382,46 @@ def test_browser_fetch_and_spa_fallback(crawl, fixtures):
 
 
 def test_seed_frontier_bulk_many_matches_per_request(spark, tmp_path):
-    """Batched bulk seeding (3 commits total) must write the same frontier
-    rows and request state as the per-request path."""
+    """Batched bulk seeding (3 commits total) writes each request's seed
+    frontier with seqs 1..n in url order at depth 0, and a fresh state row
+    (crawled 0, max_seq n) per request."""
     fx = _mini_retry_fixtures(flaky=0, retry_after=0)
     urls = [f"https://h9.example.com/p{i}" for i in range(5)]
     reqs = [(1, urls[0], 100, 10, False), (2, urls[0], 100, 10, False)]
-    r1 = make_runner(spark, fx, tmp_path / "a")
-    r2 = make_runner(spark, fx, tmp_path / "b")
-    try:
-        for rid, seed, mp, md, sd in reqs:
-            r1.seed_frontier_bulk(
-                rid, spark.createDataFrame([(u,) for u in urls], ["url"]),
-                max_pages=mp, max_depth=md, same_domain=sd,
-            )
-        r2.seed_frontier_bulk_many(
+    with make_runner(spark, fx, tmp_path) as r:
+        r.seed_frontier_bulk_many(
             reqs,
             spark.createDataFrame(
-                [(rid, u) for rid, *_ in reqs for u in urls],
+                # reversed, so the seqs must come from url order
+                [(rid, u) for rid, *_ in reqs for u in reversed(urls)],
                 "request_id long, url string",
             ),
         )
-        f1 = {(r.request_id, r.url, r.seq, r.depth)
-              for r in r1.t_frontier.read().collect()}
-        f2 = {(r.request_id, r.url, r.seq, r.depth)
-              for r in r2.t_frontier.read().collect()}
-        assert f1 == f2
-        s1 = {(r.request_id, r.crawled_so_far, r.max_seq)
-              for r in r1.t_state.read().collect()}
-        s2 = {(r.request_id, r.crawled_so_far, r.max_seq)
-              for r in r2.t_state.read().collect()}
-        assert s1 == s2
-    finally:
-        r1.close()
-        r2.close()
+        assert sorted(
+            (f.request_id, f.url, f.host, f.seq, f.depth)
+            for f in r.t_frontier.read().collect()
+        ) == [
+            (rid, u, "h9.example.com", i + 1, 0)
+            for rid, *_ in reqs for i, u in enumerate(urls)
+        ]
+        assert sorted(
+            (s.request_id, s.crawled_so_far, s.max_seq)
+            for s in r.t_state.read().collect()
+        ) == [(1, 0, 5), (2, 0, 5)]
+
+
+def test_readmit_keeps_earlier_requests(spark, tmp_path):
+    """A second admit_requests call adds to the frontier and request state:
+    request 1, admitted and crawled for one round before request 2 arrives,
+    still finishes its own crawl."""
+    fx = _mini_retry_fixtures(flaky=0, retry_after=0)
+    seeds = fx["seeds"]
+    with make_runner(spark, fx, tmp_path) as r:
+        r.admit_requests(seeds)
+        r.run(max_rounds=1)
+        r.admit_requests(seeds.assign(request_id=2))
+        r.run(max_rounds=20)
+        visited = {}
+        for v in r.t_visits.read().orderBy("seq").collect():
+            visited.setdefault(v.request_id, []).append(v.url.rsplit("/", 1)[1])
+    assert visited == {rid: ["p0", "p1", "p2", "p3", "p4"] for rid in (1, 2)}

@@ -147,32 +147,3 @@ def test_file_cap_counts_distinct_files(spark):
         .collect()
     ]
     assert got == want
-
-
-def test_admit_requests_bulk_matches_sequential(spark, fixtures, tmp_path_factory):
-    """The fleet admit path (one declarative plan) must write the SAME
-    requests/frontier/state tables as the per-seed driver loop."""
-    from tests.test_frontier import make_runner
-
-    seq_wd = tmp_path_factory.mktemp("admit_seq")
-    blk_wd = tmp_path_factory.mktemp("admit_blk")
-    with make_runner(spark, fixtures, seq_wd) as r_seq, \
-         make_runner(spark, fixtures, blk_wd) as r_blk:
-        accepted_seq = r_seq.admit_requests(fixtures["seeds"])
-        seeds_df = spark.createDataFrame(fixtures["seeds"])
-        accepted_blk = r_blk.admit_requests_bulk(seeds_df)
-        assert sorted(accepted_seq) == accepted_blk
-
-        def rows(runner, table, cols):
-            return sorted(
-                tuple(r[c] for c in cols)
-                for r in getattr(runner, table).read().collect()
-            )
-
-        req_cols = ["request_id", "seed_url", "seed_origin", "max_pages",
-                    "max_depth", "same_domain", "use_browser"]
-        assert rows(r_seq, "t_requests", req_cols) == rows(r_blk, "t_requests", req_cols)
-        fr_cols = ["request_id", "url", "host", "depth", "seq"]
-        assert rows(r_seq, "t_frontier", fr_cols) == rows(r_blk, "t_frontier", fr_cols)
-        st_cols = ["request_id", "crawled_so_far", "max_seq"]
-        assert rows(r_seq, "t_state", st_cols) == rows(r_blk, "t_state", st_cols)

@@ -170,7 +170,7 @@ def bench_crawl(spark, sf_dir, max_pages=20_000, max_rounds=8) -> tuple[float, i
     wd = tempfile.mkdtemp(prefix="bench_crawl_")
     runner = CrawlRunner(
         spark, wd, pages, redirects, images, robots_pdf, sitemaps_pdf, budgets,
-        use_bloom=True, bloom_min_rows=10_000, host_buckets=CPUS,
+        host_buckets=CPUS,
     )
     # BASELINE.json shape: a huge SEED FRONTIER (not BFS ramp-up) — inject the
     # synthetic url universe as N_REQUESTS requests' frontiers (Q1 fan-out:

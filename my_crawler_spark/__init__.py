@@ -13,7 +13,7 @@ Layout
 - ``sources``    : lake table layer (snapshot commits / merge / time travel,
                    Iceberg-compatible API with a parquet fallback), readers.
 - ``operators``  : the dataflow operators — frontier/BSP crawl scheduler,
-                   bloom seen-filter, politeness, fetch-join, extraction,
+                   politeness, fetch-join, extraction, a standalone bloom,
                    search relational ops, dedup suite, similarity search,
                    text stats, multimodal plumbing.
 - ``plans``      : multi-round drivers (CrawlRunner) with checkpoint/resume.

@@ -3090,7 +3090,6 @@ def q_crawl_bsp(spark, sf_dir) -> DataFrame:
         rendered=(
             spark.createDataFrame(fx["rendered"]) if len(fx["rendered"]) else None
         ),
-        use_bloom=False,
     )
     runner.admit_requests(fx["seeds"].head(2))
     runner.run(max_rounds=30)
@@ -3474,7 +3473,6 @@ def q_crawl_gates(spark, sf_dir) -> DataFrame:
         robots_pdf=robots_pdf,
         sitemaps_pdf=pd.DataFrame(columns=["sitemap_url", "kind", "loc", "lastmod"]),
         budgets=spark.createDataFrame([], "host string, tokens_per_round int"),
-        use_bloom=False,
     )
     try:
         runner.admit_requests(

@@ -6,6 +6,11 @@ north_rule: "broadcast bloom/cuckoo URL-seen filter" in front of the exact
 entirely; "maybe seen" rows still go through the authoritative anti-join,
 so false positives cost a join probe, never a wrong answer.
 
+The crawl round does not use it: ``admit_links`` runs the plain exact
+anti-join. On the bulk benchmark round (about 600 seen keys) the build and
+the Arrow probe cost about a third of the superstep's CPU, and "maybe seen"
+rows still shuffle against the whole seen set (ROADMAP item 2).
+
 Hashing strategy: three base hashes are computed JVM-side
 (``xxhash64(key, seed)`` — whole-stage codegen): h1/h2 drive the k bit
 positions via Kirsch-Mitzenmacher double hashing **vectorized in numpy**

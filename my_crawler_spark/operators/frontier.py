@@ -14,8 +14,8 @@ narrow control columns only:
   queued/visited checks are *time-sensitive* — a link target is skipped
   only if its conflict existed at the moment its parent popped — expressed
   as seq-inequality join conditions (see inline notes), then a per-target
-  min-(parent_seq, link_idx) winner. Bloom-prefiltered exact anti-join
-  against url_seen (operators/bloom.py).
+  min-(parent_seq, link_idx) winner. Links to urls already in url_seen
+  at round start go by one exact anti-join.
 
 Gate order per popped row (must match crawl_loop.rs exactly):
 1. budget: crawled >= max_pages -> silent drop (depth>max still counted)
@@ -276,13 +276,13 @@ def admit_links(
     #
     # Canonicalize-ONCE barrier: without the repartition below, Catalyst
     # substitutes the (20-regex) canonicalize tree into every consumer of
-    # `url` — the two filter conjuncts here, the same-origin gate, the three
-    # bloom hash columns, and both anti-join keys — re-evaluating it ~8x per
-    # link (FilterExec conjuncts are short-circuit-evaluated with no CSE
-    # across them). The exchange materializes the canonical url as a plain
-    # attribute, and it costs ~nothing net: the seen anti-join shuffles on
-    # exactly (request_id, url), so this exchange REPLACES that one rather
-    # than adding to it. Measured on the 19.2M-link bench round at
+    # `url` — the two filter conjuncts here, the same-origin gate and both
+    # anti-join keys — re-evaluating it several times per link (FilterExec
+    # conjuncts are short-circuit-evaluated with no CSE across them). The
+    # exchange materializes the canonical url as a plain attribute, and it
+    # costs ~nothing net: the seen anti-join shuffles on exactly
+    # (request_id, url), so this exchange REPLACES that one rather than
+    # adding to it. Measured on the 19.2M-link bench round at
     # local[16]: filters+hashes dropped from ~112 s to the single ~26 s
     # canonicalize pass.
     links = (
@@ -308,7 +308,7 @@ def admit_links(
     ).drop("seed_origin", "same_domain")
 
     # ORDER: prune with the cheap, unconditional drops first —
-    # (1) bloom-prefiltered anti-join vs url_seen AS OF ROUND START (links to
+    # (1) exact anti-join vs url_seen AS OF ROUND START (links to
     #     previously-visited urls are dropped at any parent seq; this round's
     #     visits must NOT be in this set — they are handled seq-sensitively
     #     by the a(t)/M(t) joins below, because a link whose parent popped
@@ -316,6 +316,7 @@ def admit_links(
     #     crawl_loop.rs:258-272),
     # (2) still-queued deferred rows,
     # then the seq-inequality joins on the tiny surviving remainder.
+    # The runner passes no `bloom`, so (1) is a plain left_anti.
     from .bloom import anti_join_with_bloom
 
     links = anti_join_with_bloom(

@@ -39,7 +39,6 @@ from ..functions.url import (
     url_host,
     url_origin,
 )
-from ..operators import bloom as bloom_mod
 from ..operators.extract import explode_chunks, extract_pages
 from ..operators.fetch import chain_token_cost, fetch_join, max_redirect_hops
 from ..operators.frontier import FOLD_IN_COLS, admit_links, assign_seqs, gate_fold
@@ -182,7 +181,9 @@ class CrawlRunner:
         robots_source_fn=None,
         round_duration_secs: int = 16,
     ):
-        self.bloom_min_rows = bloom_min_rows
+        """``use_bloom`` and ``bloom_min_rows`` are accepted and ignored:
+        link admission always drops seen links with the exact ``url_seen``
+        anti-join (``operators.frontier.admit_links``)."""
         self.spark = spark
         self.catalog = Catalog(spark, workdir)
         # Partition the big web tables by url so every round's fetch join is
@@ -211,7 +212,6 @@ class CrawlRunner:
         self.rendered = rendered  # S3 browser-view dim; None = no browser web
         self.images = images
         self.budgets = budgets
-        self.use_bloom = use_bloom
         # robots cache dynamics (robots.rs:62-134): the robots "web" is a
         # source of (origin, status, body) observations; the CACHE is policy
         # rows with TTLs. Static mode (default) resolves the policy once at
@@ -291,9 +291,9 @@ class CrawlRunner:
                 mode="overwrite",
             )
             self.page_cost = t_cost.read()
-        # running url_seen row count (bloom sizing) — maintained from commit
-        # footer counts; None = lazily initialized from the current snapshot
-        self._seen_rows: int | None = None
+        # the round run_round runs next; None = derive it from metrics at
+        # the first run() (a fresh runner resuming a crawl)
+        self._next_round: int | None = None
         # requests dim changes only at admit/seed time, but run_round
         # re-reads and RE-BROADCASTS it every round; caching the scan keeps
         # the per-round broadcast build a memory read instead of a parquet
@@ -654,11 +654,6 @@ class CrawlRunner:
         frontier = self.t_frontier.read()
         spark = self.spark
         seen = self.t_seen.read()
-        # seen-set size for bloom sizing: tracked driver-side from commit
-        # footer counts — never a count() job on the hot path
-        seen_rows = self._seen_rows
-        if seen_rows is None:
-            seen_rows = self.t_seen.count_rows()
         blocked = self.t_blocked.read()
         state = self.t_state.read()
         requests = self._requests_df()
@@ -885,10 +880,6 @@ class CrawlRunner:
             # the link/frontier pipeline needs only fold_out + round-start seen,
             # so it overlaps with the table commits in the same pool
             def job_frontier():
-                bloom = None
-                if self.use_bloom and seen_rows >= self.bloom_min_rows:
-                    # below the threshold a plain anti-join beats two extra jobs
-                    bloom = bloom_mod.build_bloom(seen, "url", expected_n=seen_rows)
                 # broadcast the narrow crawled ids; the outlink arrays (the
                 # heavy side, from the fetched cache) stay un-shuffled
                 lp = crawled_rows.select("request_id", "seq", "depth")
@@ -898,7 +889,7 @@ class CrawlRunner:
                     lp, ["request_id", "seq"]
                 )
                 new_links = admit_links(
-                    link_parents, fold_out, deferred, seen, requests, spark, bloom,
+                    link_parents, fold_out, deferred, seen, requests, spark,
                     broadcast_ctl=round_bctl,
                 )
                 seq_base = state.select("request_id", "max_seq")
@@ -943,7 +934,6 @@ class CrawlRunner:
                 for j in jobs:
                     j.result()
                 new_frontier_rows = fut_frontier.result()
-            self._seen_rows = seen_rows + self.t_seen.last_rows
 
             new_state = (
                 state.join(
@@ -966,6 +956,7 @@ class CrawlRunner:
             self._commit(round_no, "request_state", self.t_state, new_state, mode="overwrite")
 
             self._flush_lineage()
+            self._next_round = round_no + 1
             # remaining = the frontier overwrite's own footer count — no re-read
             return self.t_frontier.last_rows
         finally:
@@ -975,7 +966,9 @@ class CrawlRunner:
                 df.unpersist()
 
     def run(self, max_rounds: int = 1000) -> int:
-        start = self.next_round()
+        if self._next_round is None:
+            self._next_round = self.next_round()
+        start = self._next_round
         try:
             for i in range(max_rounds):
                 if self.run_round(start + i) == 0:

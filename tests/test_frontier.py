@@ -410,18 +410,32 @@ def test_seed_frontier_bulk_many_matches_per_request(spark, tmp_path):
         ) == [(1, 0, 5), (2, 0, 5)]
 
 
-def test_readmit_keeps_earlier_requests(spark, tmp_path):
+def test_readmit_keeps_earlier_requests(spark, tmp_path, monkeypatch):
     """A second admit_requests call adds to the frontier and request state:
     request 1, admitted and crawled for one round before request 2 arrives,
-    still finishes its own crawl."""
+    still finishes its own crawl. Rounds after the first run over a
+    non-empty url_seen; the runner's bloom options are ignored there, so
+    link admission never builds or probes the bloom filter. The second
+    run() continues the round numbers the first one left."""
+    from my_crawler_spark.operators import bloom
+
+    def no_bloom(*args, **kwargs):
+        raise AssertionError("the crawl round called the bloom filter")
+
+    monkeypatch.setattr(bloom, "build_bloom", no_bloom)
+    monkeypatch.setattr(bloom, "bloom_maybe_seen", no_bloom)
     fx = _mini_retry_fixtures(flaky=0, retry_after=0)
     seeds = fx["seeds"]
-    with make_runner(spark, fx, tmp_path) as r:
+    with make_runner(spark, fx, tmp_path, use_bloom=True, bloom_min_rows=1) as r:
         r.admit_requests(seeds)
         r.run(max_rounds=1)
         r.admit_requests(seeds.assign(request_id=2))
-        r.run(max_rounds=20)
+        last = r.run(max_rounds=20)
         visited = {}
         for v in r.t_visits.read().orderBy("seq").collect():
             visited.setdefault(v.request_id, []).append(v.url.rsplit("/", 1)[1])
+        rows = [(m.round, m.request_id) for m in r.t_metrics.read().collect()]
     assert visited == {rid: ["p0", "p1", "p2", "p3", "p4"] for rid in (1, 2)}
+    # one metrics row per (round, request); rounds numbered 1..last, no reuse
+    assert len(rows) == len(set(rows))
+    assert sorted({k for k, _ in rows}) == list(range(1, last + 1))

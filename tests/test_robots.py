@@ -178,7 +178,6 @@ def test_robots_ttl_expiry_flips_verdict_mid_crawl(spark, tmp_path):
             budgets=spark.createDataFrame(
                 [(host, 2)], "host string, tokens_per_round int"
             ),
-            use_bloom=False,
             robots_ttl_dynamic=dynamic,
             robots_source_fn=robots_source,
             round_duration_secs=50_000,  # rounds 1..3 at t=0/50k/100k; expiry at 86400
@@ -230,7 +229,6 @@ def _mini_runner(spark, tmp_path, robots_source_fn, robots_pdf, name,
         robots_pdf=robots_pdf,
         sitemaps_pdf=pd.DataFrame(columns=["sitemap_url", "kind", "loc", "lastmod"]),
         budgets=spark.createDataFrame([(host, 2)], "host string, tokens_per_round int"),
-        use_bloom=False,
         robots_ttl_dynamic=True,
         robots_source_fn=robots_source_fn,
         round_duration_secs=round_duration_secs,

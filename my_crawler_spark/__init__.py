@@ -17,7 +17,6 @@ Layout
                    search relational ops, dedup suite, similarity search,
                    text stats, multimodal plumbing.
 - ``plans``      : multi-round drivers (CrawlRunner) with checkpoint/resume.
-- ``streaming``  : Structured Streaming variants.
 - ``oracle``     : pure-Python sequential simulator of the reference's exact
                    crawl semantics (spider/src/crawl_loop.rs:106-256) used as
                    the ordering/seen-set test oracle.

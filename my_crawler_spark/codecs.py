@@ -44,7 +44,6 @@ except ImportError:
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _FAKE_MAGIC = b"FAKELOSSY1"
-_FAKE_STEP = 4  # quantization step -> max abs err 2, PSNR ~46 dB
 
 
 def _chunk(tag: bytes, body: bytes) -> bytes:
@@ -130,18 +129,6 @@ def decode_png(data: bytes) -> np.ndarray:
         else:
             raise ValueError(f"bad filter {f}")
     return out.reshape(h, w, 3)
-
-
-def encode_fake_lossy(pixels: np.ndarray, fmt: str) -> bytes:
-    """Deterministic stand-in for jpeg/webp: quantize + deflate.
-
-    NOT a real bitstream — see module docstring. Header records fmt so the
-    decoder can route, mirroring real content sniffing.
-    """
-    h, w, _ = pixels.shape
-    q = (pixels.astype(np.int16) // _FAKE_STEP).astype(np.uint8)
-    head = _FAKE_MAGIC + fmt.encode()[:4].ljust(4) + struct.pack(">HHB", w, h, _FAKE_STEP)
-    return head + zlib.compress(q.tobytes(), 6)
 
 
 def decode_fake_lossy(data: bytes) -> np.ndarray:

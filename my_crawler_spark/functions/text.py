@@ -169,11 +169,6 @@ def extract_caption_page(url: str, caption: str) -> dict:
     return {"title": title, "description": description, "chunks": chunks}
 
 
-def embed_text(title: str, heading: str | None, content: str) -> str:
-    """e5 passage template (qdrant.rs:90-97)."""
-    return f"passage: {title}\n{heading or ''}\n{content}"
-
-
 def needs_browser(html: str) -> bool:
     """SPA heuristic (crawl_loop.rs:274-284): empty page, or an app-root
     marker without any <p>/<article>. Drives the browser-fallback fetch

@@ -163,10 +163,6 @@ def py_origin(url: str) -> str | None:
     return f"{parts.scheme}://{parts.hostname}{port}"
 
 
-def py_host(url: str) -> str:
-    return (urlsplit(url).hostname or "").lower()
-
-
 def py_is_crawl_trap(url: str) -> bool:
     path = urlsplit(url).path.lower()
     return any(seg in TRAP_SEGMENTS for seg in path.split("/"))

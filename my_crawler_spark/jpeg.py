@@ -336,11 +336,6 @@ def encode_jpeg(
 # ------------------------------------------------------------------ decoder
 
 
-def _extend(v: int, s: int) -> int:
-    # T.81 F.2.2.1 EXTEND: map s low bits to signed value
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
 def _unstuff(scan: bytes) -> list[bytes]:
     """Split the entropy stream at restart markers, unstuffing FF00."""
     segments: list[bytes] = []

@@ -69,12 +69,6 @@ def ngrams_from_tokens(toks, n: int) -> F.Column:
     )
 
 
-def word_ngrams(col, n: int) -> F.Column:
-    """Array of word n-grams from a raw text column — convenience form;
-    see ngrams_from_tokens for the fast two-step pattern on hot paths."""
-    return ngrams_from_tokens(tokens(col), n)
-
-
 def ngram_shingles(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:

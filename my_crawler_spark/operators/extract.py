@@ -25,9 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -86,20 +84,6 @@ CHUNK_STRUCT = StructType(
         StructField("point_id", StringType()),
     ]
 )
-
-
-def extract_schema(carry: StructType) -> StructType:
-    return StructType(
-        list(carry.fields)
-        + [
-            StructField("decode_ok", BooleanType()),
-            StructField("phash_ok", BooleanType()),
-            StructField("phash_got", LongType()),
-            StructField("page_title", StringType()),
-            StructField("description", StringType()),
-            StructField("chunks", ArrayType(CHUNK_STRUCT)),
-        ]
-    )
 
 
 def _caption_page_fields(caption: str) -> tuple[str, str, str, list[dict]]:

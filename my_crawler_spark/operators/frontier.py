@@ -6,10 +6,11 @@ FIFO drains. The heavy plane (fetch join, image decode, chunking) runs
 fully distributed; this module then applies the cheap sequential gates over
 narrow control columns only:
 
-- ``gate_fold``: groupBy(request_id).applyInPandas — one pass in seq order
-  per request (requests fold in parallel; within a request the fold is the
-  semantics, not an implementation shortcut). Control row ~100 bytes; a
-  10^6-row round folds in well under a second per request group.
+- ``gate_fold``: one ``mapInPandas`` pass in seq order per request over
+  request_id-hash partitions (requests fold in parallel; within a request
+  the fold is the semantics, not an implementation shortcut). Control row
+  ~100 bytes; the per-row loop is linear, so one request's 10^6-row round
+  folds in seconds on a single task (about 5 s single-threaded).
 - ``admit_links``: the enqueue-dedup (crawl_loop.rs:258-272) as joins. The
   queued/visited checks are *time-sensitive* — a link target is skipped
   only if its conflict existed at the moment its parent popped — expressed
@@ -70,12 +71,6 @@ FOLD_OUT_SCHEMA = StructType(
         StructField("new_blocked_origin", StringType()),
         StructField("crawled_flag", BooleanType()),
         StructField("indexed_flag", BooleanType()),
-        # instrumentation: True when the row's segment hit a sequential
-        # hazard (403 / budget crossing / redirect collision / dup url) and
-        # took the exact per-row loop instead of the vectorized fast path —
-        # aggregated per round into metrics.slow_fold_rows so a huge-request
-        # run can prove the fast path dominates
-        StructField("fold_slow", BooleanType()),
     ]
 )
 
@@ -95,81 +90,7 @@ class _ReqState:
         self.blocked: set[str] = set()
 
 
-def _fold_segment_vectorized(pdf: pd.DataFrame, st: _ReqState) -> pd.DataFrame | None:
-    """Fast path for one batch segment: when the segment has no sequential
-    hazards — no 403s (origin propagation), no budget crossing, no redirect
-    final_url colliding with a segment url, no within-segment duplicate
-    urls — every gate is row-local given the carried state and vectorizes.
-    Returns None when a hazard exists (caller runs the exact loop instead).
-    """
-    import numpy as np
-
-    fetch_kind = pdf["fetch_kind"].fillna("")
-    ok = (fetch_kind == "ok").to_numpy()
-    if (fetch_kind == "blocked").any():
-        return None
-    if pdf["url"].duplicated().any():
-        return None
-
-    depth_over = (pdf["depth"] > st.max_depth).to_numpy()
-    dup = (
-        pdf["pre_visited"]
-        | pdf["pre_blocked"]
-        | pdf["url"].isin(st.visited)
-        | pdf["origin"].isin(st.blocked)
-    ).to_numpy()
-    robots_ok = pdf["robots_allowed_flag"].fillna(True).to_numpy(bool)
-    # final_url is marked visited ONLY by rows that reach gate 8 — a row
-    # gated out by depth/dup/robots never touches the visited set
-    # (crawl_loop.rs:203); masking the finals by the gates keeps skipped
-    # rows' redirects from polluting the carried state across batches
-    reach_g8 = ok & ~depth_over & ~dup & robots_ok
-    finals = pdf["final_url"].where(reach_g8 & (pdf["final_url"] != pdf["url"]))
-    redirected = set(finals.dropna())
-    if redirected and (
-        pdf["url"].isin(redirected).any() or (redirected & st.visited)
-    ):
-        # a redirect final colliding with this segment's urls is order-
-        # sensitive; one already in the carried set just dup-skips, but the
-        # loop handles both exactly
-        return None
-    trap = pdf["final_is_trap"].fillna(False).to_numpy(bool)
-    would_crawl = reach_g8 & ~trap
-    if st.crawled + int(would_crawl.sum()) >= st.max_pages:
-        return None  # budget crossing -> sequential
-
-    marked = ~depth_over & ~dup  # passed gates 1-3 -> visited
-    outcome = np.where(
-        depth_over, "depth_skip",
-        np.where(dup, "dup_skip",
-        np.where(~robots_ok, "robots",
-        np.where(~ok, "failed",
-        np.where(trap, "final_trap", "crawled")))),
-    )
-    final_mark = reach_g8
-    out = pd.DataFrame(
-        {
-            "request_id": pdf["request_id"].to_numpy(),
-            "seq": pdf["seq"].to_numpy(),
-            "url": pdf["url"].to_numpy(),
-            "depth": pdf["depth"].to_numpy(),
-            "outcome": outcome,
-            "final_url": pdf["final_url"].where(final_mark),
-            "visited_mark": marked,
-            "final_mark": final_mark,
-            "new_blocked_origin": None,
-            "crawled_flag": would_crawl,
-            "indexed_flag": would_crawl & pdf["has_chunks"].fillna(False).to_numpy(bool),
-            "fold_slow": False,
-        }
-    )
-    st.crawled += int(would_crawl.sum())
-    st.visited.update(pdf["url"].to_numpy()[marked])
-    st.visited.update(redirected)
-    return out
-
-
-def _fold_segment_loop(pdf: pd.DataFrame, st: _ReqState) -> pd.DataFrame:
+def _fold_segment(pdf: pd.DataFrame, st: _ReqState) -> pd.DataFrame:
     """Exact sequential gates over one batch segment, mutating the carried
     state (gate order in the module docstring; crawl_loop.rs:143-256)."""
     from ..functions.url import py_origin
@@ -181,7 +102,7 @@ def _fold_segment_loop(pdf: pd.DataFrame, st: _ReqState) -> pd.DataFrame:
         out.append(
             (r.request_id, r.seq, r.url, r.depth, outcome,
              r.final_url if final else None, visited, final, blocked,
-             crawled_flag, indexed_flag, True)
+             crawled_flag, indexed_flag)
         )
 
     for r in pdf.itertuples(index=False):
@@ -230,9 +151,9 @@ def gate_fold(control: DataFrame) -> DataFrame:
     (``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds it), with only
     the per-request counters + new-visited/blocked string sets carried
     across batches. A 10^8-row request therefore never materializes as one
-    pandas frame (the round-1 gate-fold residency hazard). Hazard-free
-    segments take the numpy fast path; segments containing a 403, a
-    redirect/url collision, or a budget crossing run the exact loop.
+    pandas frame (the round-1 gate-fold residency hazard). Every segment
+    runs the exact per-row gate loop against the carried sets, so the work
+    is linear in the round's rows.
     """
 
     def fold_stream(batches):
@@ -244,8 +165,7 @@ def gate_fold(control: DataFrame) -> DataFrame:
                 st = states.get(rid)
                 if st is None:
                     st = states[rid] = _ReqState(seg)
-                fast = _fold_segment_vectorized(seg, st)
-                yield fast if fast is not None else _fold_segment_loop(seg, st)
+                yield _fold_segment(seg, st)
 
     return (
         control.select(*FOLD_IN_COLS)

@@ -371,14 +371,6 @@ def get_page(chunks: DataFrame, source_url: str, limit: int = 10_000) -> DataFra
     )
 
 
-def is_searchable_page(url: Column) -> Column:
-    """F10 (ranking.rs:149-153): drop file-like URLs from results
-    (unparseable urls are kept — coalesce covers the null path)."""
-    from ..functions.url import looks_like_file_url
-
-    return F.coalesce(~looks_like_file_url(url), F.lit(True))
-
-
 def exact_count(df: DataFrame) -> int:
     """R3 (main.rs:303-316): exact point count."""
     return df.count()

@@ -105,8 +105,8 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("blocked", T.LongType()),
         T.StructField("admitted", T.LongType()),
         T.StructField("deferred", T.LongType()),
-        # rows whose gate-fold segment hit a sequential hazard (took the
-        # exact loop, not the vectorized fast path) — see operators/frontier
+        # always NULL since the gate fold has one path; kept so existing
+        # metrics tables resume unchanged
         T.StructField("slow_fold_rows", T.LongType()),
     ]
 )
@@ -847,9 +847,11 @@ class CrawlRunner:
                     ),
                     F.sum((F.col("outcome") == "blocked").cast("long")).alias("blocked"),
                     F.count("*").alias("admitted"),
-                    F.sum(F.col("fold_slow").cast("long")).alias("slow_fold_rows"),
                 )
                 .withColumn("round", F.lit(round_no))
+                # only perfbench's trace reads this column; drop it from
+                # METRICS_SCHEMA once the benchmark stops reading it
+                .withColumn("slow_fold_rows", F.lit(None).cast("long"))
             )
             deferred_counts = deferred.groupBy("request_id").agg(
                 F.count("*").alias("deferred")

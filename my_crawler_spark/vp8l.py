@@ -647,10 +647,6 @@ def _inv_color_transform(
     )
 
 
-def _avg2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    return ((a.astype(np.uint32) + b.astype(np.uint32)) >> 1).astype(np.uint8)
-
-
 def _inv_predictor(
     out: np.ndarray, xsize: int, ysize: int, bits: int, timg: np.ndarray
 ) -> np.ndarray:

@@ -1,12 +1,16 @@
 """The library's configuration surface: the environment variables it reads,
-the crawl runner's constructor options and its admission methods. A new
-default-off toggle or a second admission path fails here instead of
+the crawl runner's constructor options and its admission methods, plus the
+rule that every library function is referenced somewhere. A new default-off
+toggle, a second admission path or an orphan helper fails here instead of
 slipping in unmeasured."""
 
 from __future__ import annotations
 
+import ast
 import inspect
+import os
 import re
+from collections import Counter
 from pathlib import Path
 
 import my_crawler_spark
@@ -49,3 +53,37 @@ def test_runner_has_one_admission_path_per_shape():
     assert not hasattr(CrawlRunner, "seed_frontier_bulk")
     assert hasattr(CrawlRunner, "admit_requests")
     assert hasattr(CrawlRunner, "seed_frontier_bulk_many")
+
+
+def _repo_sources(root: Path) -> dict[Path, str]:
+    """Every ``.py`` file of the repository, minus run leftovers."""
+    skip = {"spark-warehouse", ".perfbench_work", "__pycache__", ".git"}
+    out = {}
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if d not in skip]
+        for name in filenames:
+            if name.endswith(".py"):
+                path = Path(dirpath) / name
+                out[path] = path.read_text()
+    return out
+
+
+def test_no_unreferenced_library_functions():
+    """Each top-level def/class under my_crawler_spark/ occurs as a whole
+    word somewhere in the repository's Python outside its own definition,
+    so a helper nothing calls is deleted rather than carried."""
+    pkg = Path(my_crawler_spark.__file__).parent
+    sources = _repo_sources(pkg.parent)
+    words = Counter(w for text in sources.values() for w in re.findall(r"\w+", text))
+    orphans = []
+    for path, text in sorted(sources.items()):
+        if pkg not in path.parents:
+            continue
+        lines = text.splitlines()
+        for node in ast.parse(text).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            own = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+            if words[node.name] <= re.findall(r"\w+", own).count(node.name):
+                orphans.append(f"{path.relative_to(pkg)}:{node.name}")
+    assert not orphans, "unreferenced: " + ", ".join(orphans)

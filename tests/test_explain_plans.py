@@ -181,8 +181,8 @@ def _admit_links_inputs(spark):
         "request_id long, seq long, depth int, outlinks array<string>",
     )
     fold_out = spark.createDataFrame(
-        [(1, 1, f"{h}/w", 1, "crawled", f"{h}/y", True, True, None, True, True, False),
-         (1, 2, f"{h}/x", 1, "crawled", f"{h}/x", True, True, None, True, True, False)],
+        [(1, 1, f"{h}/w", 1, "crawled", f"{h}/y", True, True, None, True, True),
+         (1, 2, f"{h}/x", 1, "crawled", f"{h}/x", True, True, None, True, True)],
         FOLD_OUT_SCHEMA,
     )
     deferred = spark.createDataFrame([], "request_id long, url string, host string, depth int, seq long")

@@ -7,6 +7,8 @@ data-processing capabilities of the reference crawler + search stack
 Layout
 ------
 - ``session``    : tuned SparkSession factory (AQE, Arrow, bloom joins).
+- ``worker_daemon``: the session's PySpark worker daemon; its workers re-read
+                   a zip on the import path only when it changed on disk.
 - ``functions``  : scalar column-expression kernels (URL, text, hashes,
                    vectors) — all JVM-side exprs or Arrow-batched pandas UDFs;
                    **no per-row Python UDFs anywhere** (north_rule).

@@ -30,7 +30,7 @@ from .operators import sampling as SMP
 from .operators import search as S
 from .operators import simsearch as SS
 from .operators import textstats as TS
-from .operators.interleave import interleave_by_domain, topk_per_group
+from .operators.interleave import interleave_by_domain
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

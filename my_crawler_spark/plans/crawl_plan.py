@@ -45,12 +45,6 @@ from ..operators.frontier import FOLD_IN_COLS, admit_links, assign_seqs, gate_fo
 from ..operators.politeness import admit_prefix, py_robots_policy_allowed, robots_gate
 from ..sources.lake import Catalog, upsert_chunks_with_stale_delete
 
-from ..operators.sitemaps import (  # noqa: E402 (single source for the caps)
-    SITEMAP_HARD_CAP,
-    SITEMAP_MAX_DEPTH,
-    SITEMAP_MAX_FILES,
-)
-
 # A round whose fold output has at most this many rows broadcasts its
 # control relations (crawled ids, a(t), M(t)) into the chunk and link joins,
 # so the heavy cached sides (extracted pages, outlink arrays) stay in place;

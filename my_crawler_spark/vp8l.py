@@ -49,7 +49,6 @@ _GREEN_BASE = _NUM_LITERALS + _NUM_LENGTH_CODES  # 280: first colour-cache sym
 _T_PREDICTOR = 0
 _T_COLOR = 1
 _T_SUBTRACT_GREEN = 2
-_T_INDEXING = 3
 
 _MAX_CODE_LEN = 15
 _HASH_MUL = 0x1E35A7BD

@@ -1,8 +1,8 @@
 """The library's configuration surface: the environment variables it reads,
 the crawl runner's constructor options and its admission methods, plus the
-rule that every library function is referenced somewhere. A new default-off
-toggle, a second admission path or an orphan helper fails here instead of
-slipping in unmeasured."""
+rules that every library function is referenced somewhere and every library
+import is used. A new default-off toggle, a second admission path, an orphan
+helper or a dead import fails here instead of slipping in unmeasured."""
 
 from __future__ import annotations
 
@@ -87,3 +87,25 @@ def test_no_unreferenced_library_functions():
             if words[node.name] <= re.findall(r"\w+", own).count(node.name):
                 orphans.append(f"{path.relative_to(pkg)}:{node.name}")
     assert not orphans, "unreferenced: " + ", ".join(orphans)
+
+
+def test_no_unused_library_imports():
+    """Each name a module under my_crawler_spark/ imports at top level is
+    read in that module or listed in its ``__all__``."""
+    pkg = Path(my_crawler_spark.__file__).parent
+    unused = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        imported, exported = set(), set()
+        for node in tree.body:
+            if isinstance(node, ast.Import):
+                imported |= {a.asname or a.name.split(".")[0] for a in node.names}
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                imported |= {a.asname or a.name for a in node.names}
+            elif isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                exported |= set(ast.literal_eval(node.value))
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        unused += [f"{path.relative_to(pkg)}:{n}" for n in sorted(imported - read - exported)]
+    assert not unused, "unused imports: " + ", ".join(unused)

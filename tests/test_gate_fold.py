@@ -125,9 +125,9 @@ def test_dup_row_redirect_does_not_pollute_visited(spark, small_batches):
     """A row that is itself dup-skipped (its url already visited via an
     earlier redirect final) must NOT mark its own redirect target visited —
     the reference only touches the visited set for rows that reach gate 8
-    (crawl_loop.rs:203). Batch boundaries between the three actors force the
-    fast path to rely on carried state, where the round-2 code polluted
-    st.visited with skipped rows' finals."""
+    (crawl_loop.rs:203). Batch boundaries between the three actors make the
+    per-row loop decide on the visited set carried across Arrow batches,
+    which the round-2 code polluted with skipped rows' finals."""
     h = "https://dup.example.com"
     rows = []
     seq = 0
@@ -144,7 +144,7 @@ def test_dup_row_redirect_does_not_pollute_visited(spark, small_batches):
     for i in range(20, 40):
         add(url=f"{h}/pad{i}")
     add(url=f"{h}/ff")  # reference crawls this
-    # same hazard fully inside one segment (vectorized path must also mask)
+    # same hazard with all three actors inside one Arrow batch
     add(url=f"{h}/b", kind="ok", final=f"{h}/u2")
     add(url=f"{h}/u2", kind="ok", final=f"{h}/gg")
     add(url=f"{h}/gg")

@@ -7,8 +7,9 @@ data-processing capabilities of the reference crawler + search stack
 Layout
 ------
 - ``session``    : tuned SparkSession factory (AQE, Arrow, bloom joins).
-- ``worker_daemon``: the session's PySpark worker daemon; its workers re-read
-                   a zip on the import path only when it changed on disk.
+- ``worker_zipimport``: installed when a Spark Python worker imports the
+                   package; the worker then re-reads a zip on the import path
+                   only when it changed on disk.
 - ``functions``  : scalar column-expression kernels (URL, text, hashes,
                    vectors) — all JVM-side exprs or Arrow-batched pandas UDFs;
                    **no per-row Python UDFs anywhere** (north_rule).
@@ -24,4 +25,11 @@ Layout
                    the ordering/seen-set test oracle.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+if "pyspark.worker_util" in _sys.modules:  # a Spark Python worker process
+    from my_crawler_spark.worker_zipimport import install as _install
+
+    _install()

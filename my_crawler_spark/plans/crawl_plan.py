@@ -1004,7 +1004,9 @@ class CrawlRunner:
         with self._lineage_lock:
             buf, self._lineage_buf = self._lineage_buf, []
         if buf:
-            self.t_lineage.commit(self.spark.createDataFrame(buf, LINEAGE_SCHEMA))
+            # via Arrow: a local list would be parallelized through Python workers
+            rows = pd.DataFrame(buf, columns=LINEAGE_SCHEMA.fieldNames())
+            self.t_lineage.commit(self.spark.createDataFrame(rows, LINEAGE_SCHEMA))
 
 
 def _host_of(url: str) -> str:

@@ -57,11 +57,6 @@ def get_spark(
         # 10k rows x ~5 KiB image bytes ~= 50 MiB per batch per core.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Python workers fork from this package's daemon, which stops every
-        # task from re-reading the whole directory of each unchanged zip on
-        # the worker path (pyspark.zip, py4j, the Spark jar): that re-read
-        # was ~0.2 CPU-s per task, more than most UDF bodies here.
-        .config("spark.python.daemon.module", "my_crawler_spark.worker_daemon")
         # Broadcast threshold: robots / domain_ranks / politeness_budget
         # dimension tables are small; 64 MiB keeps them broadcast even at
         # large host counts (10^7 hosts x ~60 B/row ~= 600 MB would NOT be

@@ -136,11 +136,11 @@ class SnapshotTable:
         sequence-number rule: a delete applies only to older data files);
         join count is bounded by the compaction threshold."""
         snap = self.current_snapshot() if snapshot_id is None else snapshot_id
-        if snap == 0:
-            return self.spark.createDataFrame([], self.schema)
-        data, deletes = self._entries(self._manifest(snap))
+        data, deletes = self._entries(self._manifest(snap)) if snap else ([], [])
         if not data:
-            return self.spark.createDataFrame([], self.schema)
+            # no partitions, so a job over it starts no Python task (a local
+            # list would be parallelized through a Python worker per core)
+            return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), self.schema)
         if not deletes:
             return self.spark.read.schema(self.schema).parquet(*[d for d, _ in data])
         # group data dirs by WHICH deletes apply to them -> one scan + the

@@ -1,5 +1,5 @@
-"""PySpark worker daemon whose workers re-read a zip archive's directory only
-when the archive changed on disk.
+"""Python workers re-read a zip archive's directory only when the archive
+changed on disk.
 
 Every Python task calls ``importlib.invalidate_caches()`` before it runs
 (``pyspark.worker_util.setup_spark_files``), and CPython's
@@ -9,16 +9,16 @@ one importer per imported subpackage), the py4j zip and the Spark core jar
 (5,359 entries), so every task paid about 0.2 CPU-s before its body started.
 Here an archive is re-read only when its ``(st_size, st_mtime_ns)`` differs
 from when this process last read it, or when it cannot be stat'ed, so an
-archive that changes on disk is still seen. The daemon reads each archive once
-before it forks, and every worker inherits the patch and those reads.
+archive that changes on disk is still seen.
 
-``session.get_spark`` sets ``spark.python.daemon.module`` to this module; Spark
-starts it as ``python -m my_crawler_spark.worker_daemon <worker module>``.
+The package's ``__init__`` calls ``install`` when it is imported in a Spark
+Python worker. That happens while the worker unpickles its first task that
+uses the package, after ``setup_spark_files`` has put ``--py-files`` archives
+on the path; a reused worker keeps the patch for all its later tasks.
 """
 
 from __future__ import annotations
 
-import importlib
 import os
 import zipimport
 
@@ -45,17 +45,5 @@ def invalidate_caches(self: zipimport.zipimporter) -> None:
     _read_at[archive] = key
 
 
-def main() -> None:
+def install() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
-    import pyspark.daemon
-
-    importlib.invalidate_caches()  # read each archive once, before any fork
-    pyspark.daemon.manager()
-
-
-if __name__ == "__main__":
-    # ``python -m`` runs this file as ``__main__``; run the copy imported
-    # under the module's own name, so the patched method names this module
-    from my_crawler_spark.worker_daemon import main as _main
-
-    _main()

@@ -26,6 +26,17 @@ def test_append_and_time_travel(spark, tmp_path):
     assert t.history() == [s1, s2]
 
 
+def test_read_without_data_starts_no_task(spark, tmp_path):
+    """A read of a table with no data has no partitions, so a job over it
+    starts no Python worker (a local ``[]`` is parallelized into one Python
+    task per core)."""
+    t = SnapshotTable(spark, str(tmp_path), "t0", SCHEMA)
+    for _ in range(2):  # no snapshot yet, then a snapshot of no data
+        df = t.read()
+        assert df.schema == SCHEMA and df.rdd.getNumPartitions() == 0
+        t.commit(spark.createDataFrame([], SCHEMA))
+
+
 def test_overwrite(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path), "t2", SCHEMA)
     t.commit(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))

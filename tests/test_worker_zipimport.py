@@ -1,5 +1,5 @@
-"""The worker daemon: a zip on the import path is re-read only when it changed
-on disk, and the session's Python workers run with that invalidation."""
+"""A zip on the import path is re-read only when it changed on disk, and a
+Spark Python worker that imports the package runs with that invalidation."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import zipimport
 
 import pandas as pd
 
-from my_crawler_spark import worker_daemon
+from my_crawler_spark import worker_zipimport
 
 
 def _write_zip(path: str, modules: list[str]) -> None:
@@ -34,7 +34,7 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
 
     monkeypatch.setattr(zipimport, "_read_directory", counting_read)
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
-                        worker_daemon.invalidate_caches)
+                        worker_zipimport.invalidate_caches)
     monkeypatch.setattr(sys, "path", [archive, *sys.path])
     try:
         assert importlib.import_module("wd_pkg.a").NAME == "a"
@@ -54,12 +54,14 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
         zipimport._zip_directory_cache.pop(archive, None)
 
 
-def test_session_workers_run_the_daemon_invalidation(spark):
+def test_session_workers_run_the_stat_checked_invalidation(spark):
     def report(batches):
+        import my_crawler_spark  # noqa: F401  (as a package UDF's unpickling does)
+
         for _ in batches:
             yield pd.DataFrame(
                 {"module": [zipimport.zipimporter.invalidate_caches.__module__]}
             )
 
     got = spark.range(1, numPartitions=1).mapInPandas(report, "module string").collect()
-    assert [r.module for r in got] == ["my_crawler_spark.worker_daemon"]
+    assert [r.module for r in got] == ["my_crawler_spark.worker_zipimport"]

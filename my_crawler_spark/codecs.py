@@ -35,13 +35,6 @@ import zlib
 
 import numpy as np
 
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _FAKE_MAGIC = b"FAKELOSSY1"
 

@@ -30,8 +30,6 @@ MAX_REDIRECTS = 10
 MAX_HTML_BYTES = 5 * 1024 * 1024
 ALLOWED_CTYPES = ("text/html", "application/xhtml+xml")
 
-_RESULT_COLS = ("fetch_kind", "final_url", "image_id", "outlinks", "blocked_url", "fetch_error")
-
 
 def retry_token_cost(flaky_col: F.Column, retry_after_col: F.Column) -> F.Column:
     """Politeness tokens one frontier row consumes (S2).

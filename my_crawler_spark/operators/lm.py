@@ -43,8 +43,6 @@ from pyspark.sql import functions as F
 from .dedup import tokens
 from .sampling import _hex_threshold, hash_fraction
 
-BUCKETS = ("head", "middle", "tail")
-
 
 def unigram_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(token, cnt) unigram counts over the corpus — the trained LM."""

@@ -1,6 +1,7 @@
 """CrawlRunner — the BSP crawl driver (SURVEY.md §3.1 rebuild lifecycle).
 
-Each round is one Spark job over the frontier snapshot:
+Each round is one superstep over the frontier snapshot, run as a few
+dozen Spark jobs (the layer actions, the checkpoints and the table commits):
 
   frontier ──pre-gates (joins: url_seen, blocked_origins)──▶ admit_prefix
      (politeness tokens, groupBy(host).applyInPandas) ──▶ robots_gate
@@ -263,7 +264,9 @@ class CrawlRunner:
         # complete table.
         self._sink_pool = None
         self._pending_chunks = None
-        self._deferred_caches: list = []
+        # the round checkpoints the in-flight upsert reads (extracted,
+        # fold_out); released once it is joined
+        self._sink_checkpoints: list = []
         self.t_requests = self.catalog.table("requests", REQUESTS_SCHEMA)
         self.t_robots = self.catalog.table("robots", ROBOTS_SCHEMA)
         # per-attempt + per-hop politeness cost dim (S2/Q7), WRITTEN ONCE at
@@ -322,16 +325,15 @@ class CrawlRunner:
 
     def _drain_chunks(self) -> None:
         """Join the in-flight async chunk upsert (re-raising any failure)
-        and release the round caches it pinned."""
+        and release the round checkpoints it read."""
         fut, self._pending_chunks = self._pending_chunks, None
-        if fut is not None:
-            fut.result()
-        for df in self._deferred_caches:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._deferred_caches.clear()
+        try:
+            if fut is not None:
+                fut.result()
+        finally:
+            for df in self._sink_checkpoints:
+                _release_checkpoint(df)
+            self._sink_checkpoints.clear()
 
     def close(self) -> None:
         """Release the runner's pinned caches (the bucketed pages table).
@@ -439,12 +441,12 @@ class CrawlRunner:
                     seq += 1
                     frontier_rows.append((int(s.request_id), u, _host_of(u), 1, seq))
             state_rows.append((int(s.request_id), 0, seq))
-        self.t_requests.commit(self.spark.createDataFrame(req_rows, REQUESTS_SCHEMA))
+        self.t_requests.commit(_rows_df(self.spark, req_rows, REQUESTS_SCHEMA))
         self._invalidate_requests()
         # append, like seed_frontier_bulk_many: requests admitted earlier
         # keep their queued frontier and their state
-        self.t_frontier.commit(self.spark.createDataFrame(frontier_rows, FRONTIER_SCHEMA))
-        self.t_state.commit(self.spark.createDataFrame(state_rows, STATE_SCHEMA))
+        self.t_frontier.commit(_rows_df(self.spark, frontier_rows, FRONTIER_SCHEMA))
+        self.t_state.commit(_rows_df(self.spark, state_rows, STATE_SCHEMA))
         return accepted
 
     @staticmethod
@@ -503,7 +505,7 @@ class CrawlRunner:
             (int(rid), seed, py_origin(seed), int(mp), int(md), bool(sd), False)
             for rid, seed, mp, md, sd in requests
         ]
-        self.t_requests.commit(self.spark.createDataFrame(req_rows, REQUESTS_SCHEMA))
+        self.t_requests.commit(_rows_df(self.spark, req_rows, REQUESTS_SCHEMA))
         self._invalidate_requests()
 
     # ------------------------------------------------------------------ robots
@@ -684,15 +686,40 @@ class CrawlRunner:
             ).withColumn(
                 "chain_hops", F.coalesce("chain_hops", F.lit(0).cast("int"))
             )
+        # The round's four intermediates (marked, fetched, extracted,
+        # fold_out) are eager local checkpoints, not caches. A cache ends
+        # recomputation but not lineage: every later DataFrame would carry
+        # the whole admit -> robots -> fetch -> extract -> fold tree, and the
+        # driver re-analyses, cache-matches and (AQE, after every stage)
+        # prints that plan in every commit. A checkpoint is a LogicalRDD
+        # leaf, so each commit, the link job and the chunk sink plan over
+        # leaves (the long-lineage case RDDs checkpoint for, Zaharia et al.,
+        # NSDI 2012, section 5.4). Each checkpoint is released explicitly
+        # (_release_checkpoint): marked and fetched at the end of the round,
+        # extracted and fold_out when the chunk sink that reads them is
+        # joined (_drain_chunks).
+        #
+        # Fault model: a checkpoint block lives only on the executor that
+        # wrote it and has no lineage to recompute from, so losing an
+        # executor fails the round. The crawl then resumes from its last
+        # committed round, as after a driver death (test_resume_mid_crawl).
+        # A reliable checkpoint() would survive that, but it needs a
+        # checkpoint directory setting and writes every intermediate to
+        # disk each round. Shortening the plan text by config
+        # (spark.sql.ui.explainMode, maxPlanStringLength) would cut only the
+        # printing share, not analysis or cache matching, and would hide
+        # diagnostics.
+        checkpoints: list = []
         round_caches: list = []
         hop_caches: list = []
         try:
-            marked = admit_prefix(ctl, self.budgets).cache()
-            round_caches.append(marked)
+            marked = admit_prefix(ctl, self.budgets).localCheckpoint()
+            checkpoints.append(marked)
             # per-round fetch hop bound: the max chain length among this
-            # round's fetchable rows (one tiny agg over the admission cache;
-            # replaces both the per-hop isEmpty probes and a MAX_REDIRECTS
-            # unroll — a redirect-free round plans a single classify pass)
+            # round's fetchable rows (one tiny agg over the admission
+            # checkpoint; replaces both the per-hop isEmpty probes and a
+            # MAX_REDIRECTS unroll — a redirect-free round plans a single
+            # classify pass)
             round_hops = 0
             if self.redirect_hops > 0 and "chain_hops" in marked.columns:
                 row = (
@@ -721,21 +748,11 @@ class CrawlRunner:
                 "request_id",
                 "left",
             ).withColumn("use_browser", F.coalesce("use_browser", F.lit(False)))
-            # cache only the columns the round actually re-reads: the fetch
-            # result keeps control cols + outlinks; the extract result keeps
-            # just (ids, chunks). The decode stage itself sees only
+            # checkpoint only the columns the round actually re-reads: the
+            # fetch result keeps control cols + outlinks; the extract result
+            # keeps just (ids, chunks). The decode stage itself sees only
             # (ids, final_url, image_id) — outlink arrays never ride through
             # the Arrow decode round trip.
-            #
-            # Both caches are partitioned AND sorted on (request_id, seq)
-            # BEFORE caching: every downstream join — the fold's control
-            # assembly, the chunk sink's crawled-ids join, the link job's
-            # outlink join — keys on exactly (request_id, seq), and
-            # InMemoryRelation preserves partitioning + ordering, so in the
-            # shuffle regime the heavy rows (outlink arrays, chunk text)
-            # move through ONE exchange here instead of one per consumer;
-            # only the narrow control sides shuffle per join (guide §8:
-            # heavy bytes move once, decisions ride lightweight proxies).
             fetched = fetch_join(
                 to_fetch, self.pages, self.redirects,
                 has_redirects=self.has_redirects,
@@ -744,16 +761,16 @@ class CrawlRunner:
             ).select(
                 "request_id", "seq", "fetch_kind", "final_url",
                 "blocked_url", "outlinks", "image_id",
-            ).cache()
-            round_caches.append(fetched)
+            ).localCheckpoint()
+            checkpoints.append(fetched)
             extracted = extract_pages(
                 fetched.filter(F.col("fetch_kind") == "ok").select(
                     "request_id", "seq", "final_url", "image_id"
                 ),
                 self.images,
                 image_stats=self.image_stats,
-            ).select("request_id", "seq", "chunks").cache()
-            round_caches.append(extracted)
+            ).select("request_id", "seq", "chunks").localCheckpoint()
+            checkpoints.append(extracted)
 
             # assemble control rows for the fold
             fetch_ctl = fetched.select(
@@ -776,8 +793,8 @@ class CrawlRunner:
                     F.coalesce(is_crawl_trap(F.col("final_url")), F.lit(False)),
                 )
             )
-            fold_out = gate_fold(control.select(*FOLD_IN_COLS)).cache()
-            round_caches.append(fold_out)
+            fold_out = gate_fold(control.select(*FOLD_IN_COLS)).localCheckpoint()
+            checkpoints.append(fold_out)
             fold_rows = fold_out.count()
             # Adaptive round-control strategy (AQE-style, but on the runner's
             # own superstep boundary): broadcasting the fold-derived control
@@ -791,7 +808,7 @@ class CrawlRunner:
             # canonicalize-barrier partitioning on (request_id, url) mostly
             # co-locates anyway.
             round_bctl = fold_rows <= ROUND_CTL_BROADCAST_ROWS
-            for hc in hop_caches:  # fetched is materialized; free the hop caches
+            for hc in hop_caches:  # fetched is checkpointed; free the hop caches
                 hc.unpersist()
             hop_caches.clear()
 
@@ -914,13 +931,13 @@ class CrawlRunner:
                     pool.submit(self._commit, round_no, "metrics", self.t_metrics, metrics),
                 ]
                 # join the PREVIOUS round's chunk write (it has been
-                # overlapping this round's fold), hand its pinned caches
-                # back, then launch this round's write to overlap the NEXT
-                # round. The one-thread pool serializes upserts on t_chunks.
+                # overlapping this round's fold), release its checkpoints,
+                # then launch this round's write to overlap the NEXT round.
+                # The one-thread pool serializes upserts on t_chunks.
                 self._drain_chunks()
                 for df in (extracted, fold_out):
-                    round_caches.remove(df)
-                    self._deferred_caches.append(df)
+                    checkpoints.remove(df)
+                    self._sink_checkpoints.append(df)
                 if self._sink_pool is None:
                     self._sink_pool = _fut.ThreadPoolExecutor(
                         max_workers=1, thread_name_prefix="chunk-sink"
@@ -960,6 +977,8 @@ class CrawlRunner:
                 hc.unpersist()
             for df in round_caches:
                 df.unpersist()
+            for df in checkpoints:
+                _release_checkpoint(df)
 
     def run(self, max_rounds: int = 1000) -> int:
         if self._next_round is None:
@@ -1004,9 +1023,25 @@ class CrawlRunner:
         with self._lineage_lock:
             buf, self._lineage_buf = self._lineage_buf, []
         if buf:
-            # via Arrow: a local list would be parallelized through Python workers
-            rows = pd.DataFrame(buf, columns=LINEAGE_SCHEMA.fieldNames())
-            self.t_lineage.commit(self.spark.createDataFrame(rows, LINEAGE_SCHEMA))
+            self.t_lineage.commit(_rows_df(self.spark, buf, LINEAGE_SCHEMA))
+
+
+def _rows_df(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """Local rows as a DataFrame with no Python task: a pandas frame goes
+    through Arrow, and no rows is a partition-free empty RDD. A local list,
+    or an empty pandas frame, would be parallelized through Python workers
+    that never import the package, each task re-reading Spark's zips."""
+    if not rows:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a local checkpoint (``df.localCheckpoint()``).
+    ``df.unpersist()`` does not: it uncaches a plan, and the checkpointed
+    RDD under the ``LogicalRDD`` leaf stays pinned until the JVM collects
+    it, so a long session piles the blocks up."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _host_of(url: str) -> str:

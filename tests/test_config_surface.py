@@ -1,8 +1,9 @@
 """The library's configuration surface: the environment variables it reads,
 the crawl runner's constructor options and its admission methods, plus the
-rules that every library function is referenced somewhere and every library
-import is used. A new default-off toggle, a second admission path, an orphan
-helper or a dead import fails here instead of slipping in unmeasured."""
+rules that every library function and module constant is referenced
+somewhere and every library import is used. A new default-off toggle, a
+second admission path, an orphan helper, a dead constant or a dead import
+fails here instead of slipping in unmeasured."""
 
 from __future__ import annotations
 
@@ -86,6 +87,53 @@ def test_no_unreferenced_library_functions():
             own = "\n".join(lines[node.lineno - 1 : node.end_lineno])
             if words[node.name] <= re.findall(r"\w+", own).count(node.name):
                 orphans.append(f"{path.relative_to(pkg)}:{node.name}")
+    assert not orphans, "unreferenced: " + ", ".join(orphans)
+
+
+def _assigned_names(stmts) -> list[tuple[str, ast.stmt]]:
+    """(name, statement) for each plain name a module body assigns,
+    looking inside top-level ``try`` blocks too."""
+    out = []
+    for node in stmts:
+        if isinstance(node, ast.Try):
+            for block in (node.body, *(h.body for h in node.handlers), node.orelse,
+                          node.finalbody):
+                out += _assigned_names(block)
+            continue
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        for target in targets:
+            names = target.elts if isinstance(target, ast.Tuple) else [target]
+            out += [(n.id, node) for n in names if isinstance(n, ast.Name)]
+    return out
+
+
+def test_no_unreferenced_module_constants():
+    """Each name a module under my_crawler_spark/ assigns at top level
+    (``__all__`` aside) occurs as a whole word somewhere in the repository's
+    Python outside its own assignments, so a constant or flag nothing reads
+    is deleted rather than carried."""
+    pkg = Path(my_crawler_spark.__file__).parent
+    sources = _repo_sources(pkg.parent)
+    words = Counter(w for text in sources.values() for w in re.findall(r"\w+", text))
+    orphans = []
+    for path, text in sorted(sources.items()):
+        if pkg not in path.parents:
+            continue
+        lines = text.splitlines()
+        own = Counter()
+        for name, node in _assigned_names(ast.parse(text).body):
+            stmt = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+            own[name] += re.findall(r"\w+", stmt).count(name)
+        orphans += [
+            f"{path.relative_to(pkg)}:{name}"
+            for name, n in sorted(own.items())
+            if name != "__all__" and words[name] <= n
+        ]
     assert not orphans, "unreferenced: " + ", ".join(orphans)
 
 

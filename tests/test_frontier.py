@@ -439,3 +439,51 @@ def test_readmit_keeps_earlier_requests(spark, tmp_path, monkeypatch):
     # one metrics row per (round, request); rounds numbered 1..last, no reuse
     assert len(rows) == len(set(rows))
     assert sorted({k for k, _ in rows}) == list(range(1, last + 1))
+
+
+def test_round_checkpoints_released_and_commits_plan_over_leaves(
+    spark, tmp_path, monkeypatch
+):
+    """The round's intermediates are local checkpoints, released when the
+    round (or the chunk sink reading them) is done: the session's persisted
+    RDDs stay flat across rounds, and close() returns them to where they
+    were before the first round. Every committed DataFrame plans over
+    checkpoint leaves, not over the whole round's lineage."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    def pinned() -> int:
+        return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    fx = _mini_retry_fixtures(flaky=2, retry_after=8)  # crawls in 3 rounds
+    plan_chars, counts = [], []
+    with make_runner(spark, fx, tmp_path) as r:
+        commit = r._commit
+
+        def sized_commit(round_no, name, table, df, mode="append"):
+            plan_chars.append(len(df._jdf.queryExecution().optimizedPlan().toString()))
+            return commit(round_no, name, table, df, mode=mode)
+
+        monkeypatch.setattr(r, "_commit", sized_commit)
+        r.admit_requests(fx["seeds"])
+        for _ in range(3):
+            r.run(max_rounds=1)
+            counts.append(pinned())
+    assert counts == [counts[0]] * 3
+    assert pinned() == 0
+    # six table commits a round. Each plan was 2.4M-17.5M characters when
+    # the round cached its intermediates; over checkpoints the largest are
+    # the frontier and state commits (53k-106k), which print the plan of
+    # the cached new-frontier rows
+    assert len(plan_chars) == 3 * 6
+    assert max(plan_chars) < 200_000
+
+
+def test_admit_all_rejected_batch_commits_empty(spark, tmp_path):
+    """A batch whose every seed is rejected (here: no canonical URL) still
+    commits the requests, frontier and state tables, with no rows."""
+    fx = _mini_retry_fixtures(flaky=0, retry_after=0)
+    with make_runner(spark, fx, tmp_path) as r:
+        assert r.admit_requests(fx["seeds"].assign(url="ftp://h9.example.com/p0")) == []
+        for t in (r.t_requests, r.t_frontier, r.t_state):
+            assert (t.current_snapshot(), t.count_rows()) == (1, 0)

@@ -249,24 +249,9 @@ class CrawlRunner:
         self.t_chunks = self.catalog.table("chunks", CHUNKS_SCHEMA)
         self.t_lineage = self.catalog.table("lineage", LINEAGE_SCHEMA)
         # lineage rows buffer here until _flush_lineage; the round's commit
-        # threads and the chunk sink append concurrently
+        # threads (the chunk upsert among them) append concurrently
         self._lineage_lock = threading.Lock()
         self._lineage_buf: list = []
-        # Async chunk sink (vector upsert): the chunks table is a pure sink —
-        # nothing in the crawl loop reads it — so its upsert (the round's
-        # embedding UDF plus its biggest parquet write) runs on a dedicated
-        # one-thread pool and is joined at the NEXT round's commit phase.
-        # That overlaps the write with the next superstep's CPU-bound fold:
-        # on the single-disk sandbox the write phase has a measured ~0.25-0.33
-        # parallel-scaling ceiling (BENCH/BASELINE.md), and hiding it behind
-        # compute is the same async-sink-flush shape a cluster engine uses.
-        # run()/close() drain, so every external reader of t_chunks sees a
-        # complete table.
-        self._sink_pool = None
-        self._pending_chunks = None
-        # the round checkpoints the in-flight upsert reads (extracted,
-        # fold_out); released once it is joined
-        self._sink_checkpoints: list = []
         self.t_requests = self.catalog.table("requests", REQUESTS_SCHEMA)
         self.t_robots = self.catalog.table("robots", ROBOTS_SCHEMA)
         # per-attempt + per-hop politeness cost dim (S2/Q7), WRITTEN ONCE at
@@ -317,23 +302,9 @@ class CrawlRunner:
 
         self._pinned_caches = [self.pages, self.budgets, self.robots_dim,
                                self.image_stats]
-        self._finalizer_state = {"pool": None}  # run_round parks _sink_pool here
         self._cache_finalizer = weakref.finalize(
-            self, _release_runner_resources, self._pinned_caches,
-            self._finalizer_state,
+            self, _release_runner_resources, self._pinned_caches
         )
-
-    def _drain_chunks(self) -> None:
-        """Join the in-flight async chunk upsert (re-raising any failure)
-        and release the round checkpoints it read."""
-        fut, self._pending_chunks = self._pending_chunks, None
-        try:
-            if fut is not None:
-                fut.result()
-        finally:
-            for df in self._sink_checkpoints:
-                _release_checkpoint(df)
-            self._sink_checkpoints.clear()
 
     def close(self) -> None:
         """Release the runner's pinned caches (the bucketed pages table).
@@ -341,16 +312,6 @@ class CrawlRunner:
         Long pytest sessions construct many runners against one shared JVM;
         without this the per-runner ``pages.cache()`` accumulates until the
         driver heap is exhausted (the round-1 resume-test flake)."""
-        try:
-            # belt-and-braces for abnormal exits; the normal path drains (and
-            # raises) in run(). Swallow here so a close() during exception
-            # unwind can't mask the original failure.
-            self._drain_chunks()
-        except Exception:
-            pass
-        if self._sink_pool is not None:
-            self._sink_pool.shutdown(wait=True)
-            self._sink_pool = None
         self._flush_lineage()
         # run the GC finalizer now: it frees _pinned_caches, and a finalizer
         # runs at most once, so the GC has nothing left to do
@@ -686,18 +647,17 @@ class CrawlRunner:
             ).withColumn(
                 "chain_hops", F.coalesce("chain_hops", F.lit(0).cast("int"))
             )
-        # The round's four intermediates (marked, fetched, extracted,
-        # fold_out) are eager local checkpoints, not caches. A cache ends
-        # recomputation but not lineage: every later DataFrame would carry
-        # the whole admit -> robots -> fetch -> extract -> fold tree, and the
-        # driver re-analyses, cache-matches and (AQE, after every stage)
-        # prints that plan in every commit. A checkpoint is a LogicalRDD
-        # leaf, so each commit, the link job and the chunk sink plan over
-        # leaves (the long-lineage case RDDs checkpoint for, Zaharia et al.,
-        # NSDI 2012, section 5.4). Each checkpoint is released explicitly
-        # (_release_checkpoint): marked and fetched at the end of the round,
-        # extracted and fold_out when the chunk sink that reads them is
-        # joined (_drain_chunks).
+        # The round's intermediates (marked, checked, fetched, extracted,
+        # fold_out and the new frontier rows) are eager local checkpoints,
+        # not caches. A cache ends recomputation but not lineage: every later
+        # DataFrame would carry the whole admit -> robots -> fetch -> extract
+        # -> fold tree, and the driver re-analyses, cache-matches and (AQE,
+        # after every stage) prints that plan in every commit. A checkpoint
+        # is a LogicalRDD leaf, so each commit, the link job and the chunk
+        # upsert plan over leaves (the long-lineage case RDDs checkpoint for,
+        # Zaharia et al., NSDI 2012, section 5.4). Every checkpoint is
+        # released explicitly (_release_checkpoint) at the end of the round,
+        # after the commit pool that reads them has joined.
         #
         # Fault model: a checkpoint block lives only on the executor that
         # wrote it and has no lineage to recompute from, so losing an
@@ -710,7 +670,6 @@ class CrawlRunner:
         # printing share, not analysis or cache matching, and would hide
         # diagnostics.
         checkpoints: list = []
-        round_caches: list = []
         hop_caches: list = []
         try:
             marked = admit_prefix(ctl, self.budgets).localCheckpoint()
@@ -740,7 +699,12 @@ class CrawlRunner:
                 "request_id", "seq", "url", "origin", "depth"
             )
             robots_dim, robots_bcast = self._robots_dim_for_round(round_no, to_check)
-            checked = robots_gate(to_check, robots_dim, broadcast=robots_bcast)
+            # read twice (the fetch input and the fold's robots control):
+            # checkpointed so the gate's groupBy(origin) runs once
+            checked = robots_gate(
+                to_check, robots_dim, broadcast=robots_bcast
+            ).localCheckpoint()
+            checkpoints.append(checked)
             to_fetch = checked.filter("robots_allowed_flag").select(
                 "request_id", "seq", "url", "depth"
             ).join(
@@ -906,13 +870,13 @@ class CrawlRunner:
                     broadcast_ctl=round_bctl,
                 )
                 seq_base = state.select("request_id", "max_seq")
-                # cached: reused for the frontier write AND the max_seq update
+                # checkpointed: read by the frontier write AND the max_seq update
                 nfr = (
                     assign_seqs(new_links, seq_base)
                     .select(*[f.name for f in FRONTIER_SCHEMA])
-                    .cache()
+                    .localCheckpoint()
                 )
-                round_caches.append(nfr)
+                checkpoints.append(nfr)
                 self._commit(
                     round_no, "frontier", self.t_frontier,
                     deferred.unionByName(nfr), mode="overwrite",
@@ -929,21 +893,8 @@ class CrawlRunner:
                     ),
                     pool.submit(self._commit, round_no, "visit_log", self.t_visits, visits),
                     pool.submit(self._commit, round_no, "metrics", self.t_metrics, metrics),
+                    pool.submit(job_chunks),
                 ]
-                # join the PREVIOUS round's chunk write (it has been
-                # overlapping this round's fold), release its checkpoints,
-                # then launch this round's write to overlap the NEXT round.
-                # The one-thread pool serializes upserts on t_chunks.
-                self._drain_chunks()
-                for df in (extracted, fold_out):
-                    checkpoints.remove(df)
-                    self._sink_checkpoints.append(df)
-                if self._sink_pool is None:
-                    self._sink_pool = _fut.ThreadPoolExecutor(
-                        max_workers=1, thread_name_prefix="chunk-sink"
-                    )
-                    self._finalizer_state["pool"] = self._sink_pool
-                self._pending_chunks = self._sink_pool.submit(job_chunks)
                 for j in jobs:
                     j.result()
                 new_frontier_rows = fut_frontier.result()
@@ -968,33 +919,25 @@ class CrawlRunner:
             )
             self._commit(round_no, "request_state", self.t_state, new_state, mode="overwrite")
 
-            self._flush_lineage()
             self._next_round = round_no + 1
             # remaining = the frontier overwrite's own footer count — no re-read
             return self.t_frontier.last_rows
         finally:
             for hc in hop_caches:
                 hc.unpersist()
-            for df in round_caches:
-                df.unpersist()
             for df in checkpoints:
                 _release_checkpoint(df)
+            # a failed round still records the snapshots it did commit
+            self._flush_lineage()
 
     def run(self, max_rounds: int = 1000) -> int:
         if self._next_round is None:
             self._next_round = self.next_round()
         start = self._next_round
-        try:
-            for i in range(max_rounds):
-                if self.run_round(start + i) == 0:
-                    return start + i
-            return start + max_rounds - 1
-        finally:
-            # drain the async chunk sink: the last round's upsert (and its
-            # lineage row, which the in-round flush may have missed) must
-            # land before any caller reads t_chunks/lineage
-            self._drain_chunks()
-            self._flush_lineage()
+        for i in range(max_rounds):
+            if self.run_round(start + i) == 0:
+                return start + i
+        return start + max_rounds - 1
 
     def next_round(self) -> int:
         m = self.t_metrics.read()
@@ -1017,9 +960,8 @@ class CrawlRunner:
             )
 
     def _flush_lineage(self):
-        # the async chunk sink can append concurrently with a round's flush —
-        # snapshot-and-clear under the same lock _lineage uses, then commit
-        # outside it (a late row just rides the next flush)
+        # snapshot-and-clear under the same lock the commit threads' _lineage
+        # takes, then commit outside it
         with self._lineage_lock:
             buf, self._lineage_buf = self._lineage_buf, []
         if buf:
@@ -1050,19 +992,12 @@ def _host_of(url: str) -> str:
     return (urlsplit(url).hostname or "").lower()
 
 
-def _release_runner_resources(dfs: list, state: dict) -> None:
+def _release_runner_resources(dfs: list) -> None:
     """weakref.finalize callback (module-level: must not capture the
     runner), run by close() or by the GC for runners dropped without it:
-    free the pinned caches AND stop the async chunk-sink pool (a non-daemon
-    thread per runner otherwise outlives it)."""
+    free the pinned caches."""
     for df in dfs:
         try:
             df.unpersist()
-        except Exception:
-            pass
-    pool = state.get("pool")
-    if pool is not None:
-        try:
-            pool.shutdown(wait=False)
         except Exception:
             pass

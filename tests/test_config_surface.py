@@ -1,9 +1,10 @@
 """The library's configuration surface: the environment variables it reads,
 the crawl runner's constructor options and its admission methods, plus the
 rules that every library function and module constant is referenced
-somewhere and every library import is used. A new default-off toggle, a
-second admission path, an orphan helper, a dead constant or a dead import
-fails here instead of slipping in unmeasured."""
+somewhere, every library import is used and every library thread pool is
+scoped to a ``with``. A new default-off toggle, a second admission path, an
+orphan helper, a dead constant, a dead import or a pool left running fails
+here instead of slipping in unmeasured."""
 
 from __future__ import annotations
 
@@ -157,3 +158,27 @@ def test_no_unused_library_imports():
         read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
         unused += [f"{path.relative_to(pkg)}:{n}" for n in sorted(imported - read - exported)]
     assert not unused, "unused imports: " + ", ".join(unused)
+
+
+def test_thread_pools_are_scoped():
+    """Every ``ThreadPoolExecutor(...)`` under my_crawler_spark/ is the
+    context expression of a ``with`` item, so no library pool outlives the
+    call that made it or needs a GC finalizer to shut it down."""
+    pkg = Path(my_crawler_spark.__file__).parent
+    loose = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        scoped = {
+            id(item.context_expr)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.With, ast.AsyncWith))
+            for item in node.items
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+            if name == "ThreadPoolExecutor" and id(node) not in scoped:
+                loose.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not loose, "thread pools outside a with: " + ", ".join(loose)

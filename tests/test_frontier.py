@@ -225,9 +225,10 @@ def _mini_retry_fixtures(flaky: int, retry_after: int):
 
 
 def test_first_round_lineage_and_pinned_caches(crawl):
-    """Round 1's concurrent commit threads and chunk sink each leave exactly
-    one lineage row per table, and re-admitting swaps the cached requests
-    dim instead of stacking stale handles on the runner's pinned list."""
+    """Round 1's concurrent commit threads, the chunk upsert among them,
+    each leave exactly one lineage row per table, and re-admitting swaps
+    the cached requests dim instead of stacking stale handles on the
+    runner's pinned list."""
     runner, _ = crawl
     names = [
         r.table for r in runner.t_lineage.read().filter(F.col("round") == 1).collect()
@@ -445,9 +446,9 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
     spark, tmp_path, monkeypatch
 ):
     """The round's intermediates are local checkpoints, released when the
-    round (or the chunk sink reading them) is done: the session's persisted
-    RDDs stay flat across rounds, and close() returns them to where they
-    were before the first round. Every committed DataFrame plans over
+    round's commits (the chunk upsert among them) are done: the session's
+    persisted RDDs stay flat across rounds, and close() returns them to
+    where they were before the first round. Every committed DataFrame plans over
     checkpoint leaves, not over the whole round's lineage."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
@@ -472,11 +473,40 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
     assert counts == [counts[0]] * 3
     assert pinned() == 0
     # six table commits a round. Each plan was 2.4M-17.5M characters when
-    # the round cached its intermediates; over checkpoints the largest are
-    # the frontier and state commits (53k-106k), which print the plan of
-    # the cached new-frontier rows
+    # the round cached its intermediates, and the frontier and state
+    # commits still printed 53k-106k while the new-frontier rows were a
+    # cache; with every intermediate a checkpoint each plan is under 2k
     assert len(plan_chars) == 3 * 6
-    assert max(plan_chars) < 200_000
+    assert max(plan_chars) < 10_000
+
+
+def test_round_commits_its_chunks_before_returning(spark, tmp_path, monkeypatch):
+    """run_round(k) returns with round k's chunks committed: a chunk upsert
+    held back until after the call returns would leave the table empty."""
+    import threading
+
+    from my_crawler_spark.plans import crawl_plan
+
+    release = threading.Event()
+    upsert = crawl_plan.upsert_chunks_with_stale_delete
+
+    def held_upsert(table, chunks):
+        release.wait(timeout=10)
+        return upsert(table, chunks)
+
+    monkeypatch.setattr(crawl_plan, "upsert_chunks_with_stale_delete", held_upsert)
+    fx = _mini_retry_fixtures(flaky=0, retry_after=0)
+    # the fixture's one image has no caption, so its pages index no chunks
+    fx["images"] = fx["images"].assign(caption="A page about harbour cranes.")
+    with make_runner(spark, fx, tmp_path) as r:
+        r.admit_requests(fx["seeds"])
+        try:
+            r.run_round(1)
+            after_round = r.t_chunks.count_rows()
+        finally:
+            release.set()
+    assert after_round > 0
+    assert after_round == r.t_chunks.count_rows()
 
 
 def test_admit_all_rejected_batch_commits_empty(spark, tmp_path):

@@ -71,24 +71,18 @@ def canonicalize_url(url: Column) -> Column:
     ``isNotNull`` exactly where the reference returns ``None``.
     """
     url = F.trim(url)  # Url::parse trims leading/trailing C0/space
-    scheme = url_scheme(url)
-    auth = F.lower(_authority(url))
-    # drop default port (web_visitor.rs:293-298)
-    auth = F.when(
-        (scheme == "http") & auth.endswith(":80"), F.substring(auth, 1, F.length(auth) - 3)
-    ).otherwise(auth)
-    auth = F.when(
-        (scheme == "https") & auth.endswith(":443"), F.substring(auth, 1, F.length(auth) - 4)
-    ).otherwise(auth)
-    path = _path(url)
-    path = F.when((path.isNull()) | (path == ""), F.lit("/")).otherwise(path)
-    # authority must be host[:digit-port] — Url::parse fails on bad ports
-    ok = (
-        scheme.isin("http", "https")
-        & (F.regexp_extract(auth, r"^([^:]+)", 1) != "")
-        & auth.rlike(r"^[^:@/]+(:[0-9]+)?$")
+    # Keep the tree small: reusing a Column copies its whole tree, and
+    # admit_links' pushed-down filters copy this one once per conjunct; past
+    # a few dozen regexes the generated filter method exceeds Java's 64 KB
+    # limit and Spark falls back to interpreted execution.
+    # lowercased scheme://authority, default port dropped (web_visitor.rs:293-298)
+    origin = F.lower(F.regexp_extract(url, _SCHEME_RE + r"[^/?#]*", 0))
+    origin = F.regexp_replace(
+        F.regexp_replace(origin, r"^(http://[^/]*):80\z", "$1"), r"^(https://[^/]*):443\z", "$1"
     )
-    return F.when(ok, F.concat(scheme, F.lit("://"), auth, path)).otherwise(F.lit(None))
+    path = F.regexp_replace(_path(url), "^$", "/")
+    # http(s), authority host[:digit-port] — Url::parse fails on bad ports
+    return F.when(origin.rlike(r"^https?://[^:@/]+(:[0-9]+)?$"), F.concat(origin, path))
 
 
 def url_host(url: Column) -> Column:

@@ -194,17 +194,15 @@ def admit_links(
     # extract_links filters (web_visitor.rs:315-331): scheme drop happens via
     # canonicalize returning NULL; file-URL drop; then enqueue trap filter.
     #
-    # Canonicalize-ONCE barrier: without the repartition below, Catalyst
-    # substitutes the (20-regex) canonicalize tree into every consumer of
-    # `url` — the two filter conjuncts here, the same-origin gate and both
-    # anti-join keys — re-evaluating it several times per link (FilterExec
-    # conjuncts are short-circuit-evaluated with no CSE across them). The
-    # exchange materializes the canonical url as a plain attribute, and it
-    # costs ~nothing net: the seen anti-join shuffles on exactly
-    # (request_id, url), so this exchange REPLACES that one rather than
-    # adding to it. Measured on the 19.2M-link bench round at
-    # local[16]: filters+hashes dropped from ~112 s to the single ~26 s
-    # canonicalize pass.
+    # The repartition makes the canonical url a plain attribute for what
+    # follows the exchange: the same-origin gate and both anti-join keys read
+    # the exchanged column, and the seen anti-join keys on the same
+    # (request_id, url). It is no barrier for the filters: Catalyst pushes
+    # `isNotNull` and the file and trap conjuncts through the exchange and
+    # the projection into one Filter below the exchange, which evaluates the
+    # canonicalize_url tree once per conjunct (FilterExec shares no
+    # subexpressions across conjuncts); the projection evaluates it once
+    # more. That is why the tree must stay small (see canonicalize_url).
     links = (
         crawled_rows.select(
             "request_id",

@@ -2,7 +2,9 @@
 
 Scale stance: these configs are chosen for a 1000-executor cluster reading
 ~100 TB, then scaled down by env vars for local[N] testing. Every knob is
-commented with the at-scale rationale.
+commented with the at-scale rationale, except the generated-class cache
+size, which is sized from the measured working set of a crawl and its
+search queries.
 """
 
 from __future__ import annotations
@@ -65,6 +67,15 @@ def get_spark(
         # Parquet scans: 128 MiB splits is the sweet spot for 100 TB scans.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-class cache (static: set before the session starts). At
+        # Spark's default of 100 entries the LRU evicted every class before
+        # its reuse: every bulk crawl round compiled 186-193 classes, every
+        # paced one 184-244, every warm search query 60-63. Measured working
+        # sets on a 4-core VM: 391 classes for 3 bulk rounds plus 8 queries,
+        # 558 for an 8-round paced crawl. At 1000 entries warm queries
+        # compile 0-2 classes, bulk rounds 165/21/8, and metaspace does not
+        # grow (177 MB after the bulk rounds and queries, 183 MB at 100).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )

@@ -448,28 +448,48 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
     """The round's intermediates are local checkpoints, released when the
     round's commits (the chunk upsert among them) are done: the session's
     persisted RDDs stay flat across rounds, and close() returns them to
-    where they were before the first round. Every committed DataFrame plans over
-    checkpoint leaves, not over the whole round's lineage."""
+    where they were before the first round. Every committed DataFrame, the
+    upserted chunks included, plans over checkpoint leaves, not over the
+    whole round's lineage. Warm rounds reuse the generated classes of the
+    first instead of compiling them again."""
+    from my_crawler_spark.plans import crawl_plan
+
     jsc = spark.sparkContext._jsc
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     before = set(jsc.getPersistentRDDs().keySet())
 
     def pinned() -> int:
         return len(set(jsc.getPersistentRDDs().keySet()) - before)
 
+    def plan_len(df) -> int:
+        return len(df._jdf.queryExecution().optimizedPlan().toString())
+
     fx = _mini_retry_fixtures(flaky=2, retry_after=8)  # crawls in 3 rounds
-    plan_chars, counts = [], []
+    # the fixture's one image has no caption, so its pages index no chunks
+    fx["images"] = fx["images"].assign(caption="A page about harbour cranes.")
+    plan_chars, chunk_plan_chars, counts, compiles = [], [], [], []
+    upsert = crawl_plan.upsert_chunks_with_stale_delete
+
+    def sized_upsert(table, chunks):
+        chunk_plan_chars.append(plan_len(chunks))
+        return upsert(table, chunks)
+
+    monkeypatch.setattr(crawl_plan, "upsert_chunks_with_stale_delete", sized_upsert)
     with make_runner(spark, fx, tmp_path) as r:
         commit = r._commit
 
         def sized_commit(round_no, name, table, df, mode="append"):
-            plan_chars.append(len(df._jdf.queryExecution().optimizedPlan().toString()))
+            plan_chars.append(plan_len(df))
             return commit(round_no, name, table, df, mode=mode)
 
         monkeypatch.setattr(r, "_commit", sized_commit)
         r.admit_requests(fx["seeds"])
         for _ in range(3):
+            compiled = codegen.METRIC_COMPILATION_TIME().getCount()
             r.run(max_rounds=1)
+            compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - compiled)
             counts.append(pinned())
+        chunk_rows = r.t_chunks.count_rows()
     assert counts == [counts[0]] * 3
     assert pinned() == 0
     # six table commits a round. Each plan was 2.4M-17.5M characters when
@@ -478,6 +498,13 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
     # cache; with every intermediate a checkpoint each plan is under 2k
     assert len(plan_chars) == 3 * 6
     assert max(plan_chars) < 10_000
+    assert len(chunk_plan_chars) == 3 and chunk_rows > 0
+    assert max(chunk_plan_chars) < 10_000
+    # at Spark's default 100-entry class cache each round compiled about
+    # 200 classes (206/203/203), every class evicted before its reuse; a
+    # cold first round still compiles about 200 and the third about 10. An
+    # absolute bound: after earlier tests in this JVM, round 1 compiles ~0
+    assert compiles[2] < 50, compiles
 
 
 def test_round_commits_its_chunks_before_returning(spark, tmp_path, monkeypatch):

@@ -183,7 +183,6 @@ def admit_links(
     requests_dim: DataFrame,
     spark,
     bloom=None,
-    broadcast_ctl: bool = False,
 ) -> DataFrame:
     """New-link admission for one round -> (request_id, url, host, depth,
     parent_seq, link_idx) candidates in reference enqueue order.
@@ -247,82 +246,38 @@ def admit_links(
 
     # --- time-sensitive queued/visited checks (see module docstring) -------
     # a(t): the admitted row with this url, if any (urls unique per request).
-    # broadcast_ctl: the round's fold output is politeness-bounded, so these
-    # two narrow control builds broadcast straight off the fold cache (no
-    # shuffle on either side) and the much larger exploded-link side never
-    # shuffles for them. (In THIS regime a merged single-relation variant
-    # needs a pre-aggregation shuffle of the union — measured slower than
-    # two direct broadcasts.) In the shuffle regime (huge rounds, see
-    # crawl_plan.ROUND_CTL_BROADCAST_ROWS) the economics invert: two
-    # sort-merge joins sort the much larger exploded-link side TWICE, so
-    # there the a(t)/M(t) sides merge into one relation first and the link
-    # side is shuffled+sorted once.
-    if broadcast_ctl:
-        admitted = F.broadcast(fold_out.select(
-            F.col("request_id").alias("__a_rid"),
-            F.col("url").alias("__a_url"),
-            F.col("seq").alias("__a_seq"),
-            F.col("visited_mark").alias("__a_visited"),
-        ))
-        links = links.join(
-            admitted,
-            (F.col("request_id") == F.col("__a_rid"))
-            & (F.col("url") == F.col("__a_url")),
-            "left",
-        ).drop("__a_rid", "__a_url")
-        # M(t): earliest final_url visit mark for this url
-        finals = F.broadcast(
-            fold_out.filter(F.col("final_mark"))
-            .groupBy("request_id", "final_url")
-            .agg(F.min("seq").alias("__m_seq"))
-            .select(
-                F.col("request_id").alias("__m_rid"),
-                F.col("final_url").alias("__m_url"),
-                "__m_seq",
-            )
+    # The round's fold output is politeness-bounded, so the a(t) and M(t)
+    # builds broadcast straight off its checkpoint and the much larger
+    # exploded-link side never shuffles for them.
+    admitted = F.broadcast(fold_out.select(
+        F.col("request_id").alias("__a_rid"),
+        F.col("url").alias("__a_url"),
+        F.col("seq").alias("__a_seq"),
+        F.col("visited_mark").alias("__a_visited"),
+    ))
+    links = links.join(
+        admitted,
+        (F.col("request_id") == F.col("__a_rid"))
+        & (F.col("url") == F.col("__a_url")),
+        "left",
+    ).drop("__a_rid", "__a_url")
+    # M(t): earliest final_url visit mark for this url
+    finals = F.broadcast(
+        fold_out.filter(F.col("final_mark"))
+        .groupBy("request_id", "final_url")
+        .agg(F.min("seq").alias("__m_seq"))
+        .select(
+            F.col("request_id").alias("__m_rid"),
+            F.col("final_url").alias("__m_url"),
+            "__m_seq",
         )
-        links = links.join(
-            finals,
-            (F.col("request_id") == F.col("__m_rid"))
-            & (F.col("url") == F.col("__m_url")),
-            "left",
-        ).drop("__m_rid", "__m_url")
-    else:
-        # merged control: a(t) rows are unique per (request_id, url), so a
-        # union with the grouped M(t) rows aggregates losslessly (each agg
-        # sees at most one non-null input per key)
-        ctl = (
-            fold_out.select(
-                "request_id",
-                "url",
-                F.col("seq").alias("__a_seq"),
-                F.col("visited_mark").alias("__a_visited"),
-                F.lit(None).cast("long").alias("__m_seq"),
-            )
-            .unionByName(
-                fold_out.filter(F.col("final_mark"))
-                .groupBy("request_id", F.col("final_url").alias("url"))
-                .agg(F.min("seq").alias("__m_seq"))
-                .select(
-                    "request_id",
-                    "url",
-                    F.lit(None).cast("long").alias("__a_seq"),
-                    F.lit(None).cast("boolean").alias("__a_visited"),
-                    "__m_seq",
-                )
-            )
-            .groupBy("request_id", "url")
-            .agg(
-                F.max("__a_seq").alias("__a_seq"),
-                F.max("__a_visited").alias("__a_visited"),
-                F.min("__m_seq").alias("__m_seq"),
-            )
-        )
-        # shuffled-hash, not sort-merge: the exploded-link side is many
-        # times larger than the politeness-bounded ctl relation, and SMJ
-        # would sort it; hashing the ctl side per partition skips that
-        # sort entirely (guide §3.1 — build side bounded by the round)
-        links = links.join(ctl.hint("shuffle_hash"), ["request_id", "url"], "left")
+    )
+    links = links.join(
+        finals,
+        (F.col("request_id") == F.col("__m_rid"))
+        & (F.col("url") == F.col("__m_url")),
+        "left",
+    ).drop("__m_rid", "__m_url")
     # pass iff: (no admitted row OR (it popped earlier and was not visited))
     #       AND (no final mark at seq <= parent_seq)
     links = links.filter(

@@ -110,21 +110,14 @@ def admit_prefix(frontier: DataFrame, budgets: DataFrame) -> DataFrame:
     return _admitted_from_ranked(ranked)
 
 
-def robots_gate(
-    rows: DataFrame, robots_dim: DataFrame, salt: int = 8,
-    broadcast: bool = True,
-) -> DataFrame:
+def robots_gate(rows: DataFrame, robots_dim: DataFrame, salt: int = 8) -> DataFrame:
     """Adds ``robots_allowed_flag`` via per-(origin, salt) applyInPandas
     batches.
 
     rows:       must carry (origin, url) (+ anything else, passed through)
     robots_dim: (origin, entry_body:string nullable, allow_all:boolean) —
-                the cache-policy-resolved robots table (robots.rs:100-134).
-    broadcast:  at web scale robots is a TABLE (10^8 origins = multi-GB),
-                not a dim — pass False above the broadcast threshold and the
-                join falls back to a shuffle join on origin (both sides
-                hash-partition; the frontier side was about to shuffle by
-                origin for the grouped matcher anyway).
+                the cache-policy-resolved robots table (robots.rs:100-134),
+                broadcast into the join.
     Origins with no robots row behave as 404 allow-all (robots.rs:108-114).
 
     Matching is per-row independent — only the body parse is per-group — so
@@ -165,13 +158,11 @@ def robots_gate(
         pdf["robots_allowed_flag"] = verdict
         return pdf.drop(columns=["__entry_body", "__allow_all"])
 
-    dim = robots_dim.select(
+    dim = F.broadcast(robots_dim.select(
         "origin",
         F.col("entry_body").alias("__entry_body"),
         F.col("allow_all").alias("__allow_all"),
-    )
-    if broadcast:
-        dim = F.broadcast(dim)
+    ))
     out = (
         rows.join(dim, "origin", "left")
         .groupBy(*group_keys)

@@ -4,13 +4,21 @@ Each round is one superstep over the frontier snapshot, run as a few
 dozen Spark jobs (the layer actions, the checkpoints and the table commits):
 
   frontier ──pre-gates (joins: url_seen, blocked_origins)──▶ admit_prefix
-     (politeness tokens, groupBy(host).applyInPandas) ──▶ robots_gate
-     (groupBy(origin).applyInPandas) ──▶ fetch_join (pages ⋈ redirects,
-     bounded iterative) ──▶ extract_pages (mapInPandas decode/phash/chunk)
-     ──▶ gate_fold (sequential per-request semantics over control columns)
-     ──▶ commits: url_seen ∪ marks, blocked_origins, visit_log, metrics,
-     chunks (upsert + stale-version delete), next frontier = deferred ∪
-     admit_links(...)
+     (politeness tokens, a window cumsum per (request, host)) ──▶
+     robots_gate (groupBy(origin).applyInPandas) ──▶ fetch_join (pages ⋈
+     redirects, bounded iterative) ──▶ extract_pages (mapInPandas
+     decode/phash/chunk) ──▶ gate_fold (sequential per-request semantics
+     over control columns) ──▶ commits: url_seen ∪ marks, blocked_origins,
+     visit_log, metrics, chunks (upsert + stale-version delete), next
+     frontier = deferred ∪ admit_links(...)
+
+Each join of the round has one plan. The round's control relations (the
+crawled ids, and admit_links' a(t) and M(t)) and the robots dim are
+politeness-bounded, a few hundred rows a round, so they always broadcast
+into the heavier side. The robots source, a pandas frame or a DataFrame of
+(origin, status, body), becomes a DataFrame at the boundary and resolves
+through one column-form policy (_resolve_policies), at t=0 and in every
+dynamic refresh.
 
 All persistent state lives in SnapshotTable commits, so killing the driver
 between rounds and constructing a new CrawlRunner on the same workdir
@@ -31,7 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.robots import policy_for_status, robots_sitemaps
+from ..functions.robots import (
+    ROBOTS_FAIL_TTL_SECS,
+    ROBOTS_MAX_BYTES,
+    ROBOTS_OK_TTL_SECS,
+    robots_sitemaps,
+)
 from ..functions.url import (
     is_crawl_trap,
     py_canonicalize_url,
@@ -45,15 +58,6 @@ from ..operators.fetch import chain_token_cost, fetch_join, max_redirect_hops
 from ..operators.frontier import FOLD_IN_COLS, admit_links, assign_seqs, gate_fold
 from ..operators.politeness import admit_prefix, py_robots_policy_allowed, robots_gate
 from ..sources.lake import Catalog, upsert_chunks_with_stale_delete
-
-# A round whose fold output has at most this many rows broadcasts its
-# control relations (crawled ids, a(t), M(t)) into the chunk and link joins,
-# so the heavy cached sides (extracted pages, outlink arrays) stay in place;
-# above it those joins shuffle on (request_id, seq) / (request_id, url).
-ROUND_CTL_BROADCAST_ROWS = 1_000_000
-# The robots dim broadcasts into the gate join up to this many rows; a
-# larger dim (10^8 origins is a table) is shuffle-joined on origin.
-ROBOTS_BROADCAST_ROWS = 1_000_000
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -165,7 +169,7 @@ class CrawlRunner:
         pages: DataFrame,
         redirects: DataFrame,
         images: DataFrame,
-        robots_pdf: pd.DataFrame,
+        robots_pdf: pd.DataFrame | DataFrame | None,
         sitemaps_pdf: pd.DataFrame,
         budgets: DataFrame,
         rendered: DataFrame | None = None,
@@ -208,36 +212,21 @@ class CrawlRunner:
         self.images = images
         self.budgets = budgets
         # robots cache dynamics (robots.rs:62-134): the robots "web" is a
-        # source of (origin, status, body) observations; the CACHE is policy
-        # rows with TTLs. Static mode (default) resolves the policy once at
-        # t=0 — the multi-hour shape where no entry expires mid-crawl.
-        # Dynamic mode (robots_ttl_dynamic) keeps the cache in a
+        # source of (origin, status, body) observations, a pandas frame or
+        # a DataFrame (``robots_pdf``, or ``robots_source_fn(now)``); the
+        # CACHE is policy rows with TTLs. Static mode (default) resolves the
+        # policy once at t=0, the multi-hour shape where no entry expires
+        # mid-crawl. Dynamic mode (robots_ttl_dynamic) keeps the cache in a
         # SnapshotTable and re-fetches expired origins each round at the
-        # logical clock now = (round-1) * round_duration_secs — the
-        # multi-day 100 TB shape (TTL 24 h ok / 5 min fail).
+        # logical clock now = (round-1) * round_duration_secs, the
+        # multi-day shape (TTL 24 h ok / 5 min fail). Both shapes resolve
+        # through the same column-form policy (_resolve_policies).
         self.robots_ttl_dynamic = robots_ttl_dynamic
         self.robots_source_fn = robots_source_fn or (lambda now: robots_pdf)
         self.round_duration_secs = round_duration_secs
-        seed_source = self.robots_source_fn(0)
-        if isinstance(seed_source, DataFrame):
-            # DataFrame-native source (10^8 origins is a table, not a dim):
-            # the t=0 policy resolution stays relational — nothing is
-            # materialized on the driver (VERDICT r3 item #6).
-            self.robots_pdf = None
-            self.robots_dim = self._resolve_policies(seed_source).select(
-                "origin", "entry_body", "allow_all"
-            )
-        else:
-            rows = []
-            for r in seed_source.itertuples():
-                body, allow_all, ttl = policy_for_status(int(r.status), r.body or "", None)
-                rows.append((r.origin, body, bool(allow_all), int(ttl)))
-            self.robots_pdf = pd.DataFrame(
-                rows, columns=["origin", "entry_body", "allow_all", "ttl_secs"]
-            )
-            self.robots_dim = spark.createDataFrame(
-                self.robots_pdf[["origin", "entry_body", "allow_all"]]
-            )
+        self.robots_dim = self._resolve_policies(self._source_df(0)).select(
+            "origin", "entry_body", "allow_all"
+        )
         self.sitemaps_pdf = sitemaps_pdf
         # state tables
         self.t_frontier = self.catalog.table("frontier", FRONTIER_SCHEMA)
@@ -356,25 +345,19 @@ class CrawlRunner:
     def admit_requests(self, seeds_pdf: pd.DataFrame) -> list[int]:
         """add_crawl_request + seed-time sitemap seeding (crawl_loop.rs:61-69,
         106-141). Returns accepted request_ids."""
-        if self.robots_pdf is not None:
-            robots_by_origin = {
-                r.origin: (r.entry_body, r.allow_all)
-                for r in self.robots_pdf.itertuples()
-            }
-        else:
-            # DataFrame-native robots source: pull policies for the SEED
-            # origins only — bounded by the request batch, not the table
-            seed_origins = {
-                py_origin(c)
-                for c in (py_canonicalize_url(s.url) for s in seeds_pdf.itertuples())
-                if c is not None
-            }
-            robots_by_origin = {
-                r.origin: (r.entry_body, r.allow_all)
-                for r in self.robots_dim.filter(
-                    F.col("origin").isin(sorted(seed_origins))
-                ).collect()
-            }
+        # pull policies for the SEED origins only: bounded by the request
+        # batch, not the robots table
+        seed_origins = {
+            py_origin(c)
+            for c in (py_canonicalize_url(s.url) for s in seeds_pdf.itertuples())
+            if c is not None
+        }
+        robots_by_origin = {
+            r.origin: (r.entry_body, r.allow_all)
+            for r in self.robots_dim.filter(
+                F.col("origin").isin(sorted(seed_origins))
+            ).collect()
+        }
         accepted, req_rows, frontier_rows, state_rows = [], [], [], []
         for s in seeds_pdf.itertuples():
             seed = py_canonicalize_url(s.url)
@@ -470,44 +453,34 @@ class CrawlRunner:
         self._invalidate_requests()
 
     # ------------------------------------------------------------------ robots
-    def _source_df(self, now: int) -> tuple[DataFrame, bool]:
-        """The robots source as (DataFrame of (origin, status, body),
-        is_dim_sized).
-
-        Accepts either shape from ``robots_source_fn``: a Spark DataFrame
-        (the 100 TB path — joins stay relational, nothing touches the
-        driver, is_dim_sized=False) or a pandas frame (fixture webs —
-        converted with an EXPLICIT schema so a zero-row refresh round
-        cannot crash on schema inference; always broadcast-sized)."""
+    def _source_df(self, now: int) -> DataFrame:
+        """The robots source at ``now`` as a DataFrame of (origin, status,
+        body). A pandas frame is converted with an explicit schema, so a
+        zero-row refresh round cannot crash on schema inference."""
         src = self.robots_source_fn(now)
         if isinstance(src, DataFrame):
-            return src.select("origin", "status", "body"), False
-        return (
-            self.spark.createDataFrame(
-                src[["origin", "status", "body"]],
-                schema="origin string, status long, body string",
-            ),
-            True,
+            return src.select("origin", "status", "body")
+        return self.spark.createDataFrame(
+            src[["origin", "status", "body"]],
+            schema="origin string, status long, body string",
         )
 
     @staticmethod
     def _truncated_body() -> F.Column:
-        """robots body capped at ROBOTS_MAX_BYTES BYTES (robots.rs:86 caps
-        the fetched byte stream, then from_utf8_lossy) — encode, slice the
-        binary, decode; a rule straddling the cap decodes lossily exactly
-        like the reference."""
-        from ..functions.robots import ROBOTS_MAX_BYTES
-
-        return F.decode(
-            F.substring(F.encode(F.col("body"), "UTF-8"), 1, ROBOTS_MAX_BYTES),
-            "UTF-8",
+        """The robots body capped at ROBOTS_MAX_BYTES bytes, as
+        policy_for_status caps it (robots.rs:86 caps the fetched byte
+        stream, then from_utf8_lossy): a null body reads as empty, and a
+        character the cap splits becomes U+FFFD. ``decode`` would raise
+        MALFORMED_CHARACTER_CODING on the split character instead, so the
+        sliced bytes are cast and repaired with make_valid_utf8."""
+        capped = F.substring(
+            F.encode(F.coalesce(F.col("body"), F.lit("")), "UTF-8"), 1, ROBOTS_MAX_BYTES
         )
+        return F.make_valid_utf8(capped.cast("string"))
 
     def _resolve_policies(self, src: DataFrame) -> DataFrame:
         """policy_for_status (robots.rs:100-134) in COLUMN form, no-stale
         case: 2xx parse 24 h / 4xx allow-all 24 h / else disallow 5 min."""
-        from ..functions.robots import ROBOTS_FAIL_TTL_SECS, ROBOTS_OK_TTL_SECS
-
         status = F.coalesce(F.col("status"), F.lit(404))
         is_2xx = (status >= 200) & (status < 300)
         is_4xx = (status >= 400) & (status < 500)
@@ -523,24 +496,19 @@ class CrawlRunner:
             .alias("ttl_secs"),
         )
 
-    def _robots_dim_for_round(self, round_no: int, to_check: DataFrame):
-        """-> (robots_dim, broadcast_flag) for this round's gate.
+    def _robots_dim_for_round(self, round_no: int, to_check: DataFrame) -> DataFrame:
+        """The robots dim for this round's gate.
 
-        Static mode: the t=0 policy dim, always broadcast (current webs are
-        dimension-sized). Dynamic mode (robots.rs:69-97): read the cache
-        table, split fresh/expired at now = (round-1)*round_duration_secs,
-        re-resolve (expired ∪ uncached-but-needed) origins against the
-        robots source with the policy table in COLUMN form — 2xx parse
-        24 h / 4xx allow-all 24 h / 5xx stale-if-available else disallow
-        5 min (robots.rs:100-134) — and commit the merged cache. The dim is
-        broadcast only up to ROBOTS_BROADCAST_ROWS rows; above it the
-        gate join falls back to a shuffle join (10^8 origins is a table,
-        not a dim).
+        Static mode: the t=0 policy dim. Dynamic mode (robots.rs:69-97):
+        read the cache table, split fresh/expired at now =
+        (round-1)*round_duration_secs, re-resolve (expired ∪
+        uncached-but-needed) origins against the robots source with the
+        policy table in COLUMN form — 2xx parse 24 h / 4xx allow-all 24 h /
+        5xx stale-if-available else disallow 5 min (robots.rs:100-134) —
+        and commit the merged cache.
         """
-        from ..functions.robots import ROBOTS_FAIL_TTL_SECS, ROBOTS_OK_TTL_SECS
-
         if not self.robots_ttl_dynamic:
-            return self.robots_dim, True
+            return self.robots_dim
         now = (round_no - 1) * self.round_duration_secs
         cache = self.t_robots.read()
         fresh = cache.filter(F.col("fetched_at") + F.col("ttl_secs") > F.lit(now))
@@ -554,7 +522,7 @@ class CrawlRunner:
             F.col("fetched_at").alias("__stale_at"),
             F.col("ttl_secs").alias("__stale_ttl"),
         )
-        src, src_is_dim = self._source_df(now)
+        src = self._source_df(now)
         status = F.coalesce(F.col("status"), F.lit(404))  # no row = 404 fetch
         is_2xx = (status >= 200) & (status < 300)
         is_4xx = (status >= 400) & (status < 500)
@@ -564,12 +532,8 @@ class CrawlRunner:
         # body for a fresh 24 h (robots.rs:119-123 re-inserts `stale`
         # unchanged).
         stale_hit = ~is_2xx & ~is_4xx & F.col("__stale").isNotNull()
-        # fixture (pandas) sources stay a broadcast dim; a DataFrame source
-        # is table-sized, so the join is left to AQE (shuffle or broadcast
-        # by measured size)
-        src_j = F.broadcast(src) if src_is_dim else src
         resolved = (
-            needed.join(src_j, "origin", "left")
+            needed.join(F.broadcast(src), "origin", "left")
             .join(stale, "origin", "left")
             .select(
                 "origin",
@@ -600,8 +564,7 @@ class CrawlRunner:
             .select(*[f.name for f in ROBOTS_SCHEMA])
         )
         self.t_robots.commit(merged, mode="overwrite")
-        dim = self.t_robots.read().select("origin", "entry_body", "allow_all")
-        return dim, self.t_robots.last_rows <= ROBOTS_BROADCAST_ROWS
+        return self.t_robots.read().select("origin", "entry_body", "allow_all")
 
     # ------------------------------------------------------------------ round
     def run_round(self, round_no: int) -> int:
@@ -698,12 +661,10 @@ class CrawlRunner:
             to_check = admitted.filter("fetchable").select(
                 "request_id", "seq", "url", "origin", "depth"
             )
-            robots_dim, robots_bcast = self._robots_dim_for_round(round_no, to_check)
+            robots_dim = self._robots_dim_for_round(round_no, to_check)
             # read twice (the fetch input and the fold's robots control):
             # checkpointed so the gate's groupBy(origin) runs once
-            checked = robots_gate(
-                to_check, robots_dim, broadcast=robots_bcast
-            ).localCheckpoint()
+            checked = robots_gate(to_check, robots_dim).localCheckpoint()
             checkpoints.append(checked)
             to_fetch = checked.filter("robots_allowed_flag").select(
                 "request_id", "seq", "url", "depth"
@@ -759,19 +720,6 @@ class CrawlRunner:
             )
             fold_out = gate_fold(control.select(*FOLD_IN_COLS)).localCheckpoint()
             checkpoints.append(fold_out)
-            fold_rows = fold_out.count()
-            # Adaptive round-control strategy (AQE-style, but on the runner's
-            # own superstep boundary): broadcasting the fold-derived control
-            # relations (crawled ids, a(t), M(t)) keeps the heavy cached
-            # sides un-shuffled — a clear win on politeness-bounded rounds —
-            # but the broadcast BUILD is single-threaded driver work that
-            # does not shrink with executor count. On huge seed-frontier
-            # rounds (the BASELINE.json shape: one 10^10-url superstep) that
-            # serial fraction caps N->4N scaling, so past the threshold the
-            # links/chunks joins fall back to shuffle joins, which the
-            # canonicalize-barrier partitioning on (request_id, url) mostly
-            # co-locates anyway.
-            round_bctl = fold_rows <= ROUND_CTL_BROADCAST_ROWS
             for hc in hop_caches:  # fetched is checkpointed; free the hop caches
                 hc.unpersist()
             hop_caches.clear()
@@ -837,9 +785,7 @@ class CrawlRunner:
                 .select(*[f.name for f in METRICS_SCHEMA])
             )
             crawled_rows = fold_out.filter(F.col("outcome") == "crawled")
-            crawled_ids = crawled_rows.select("request_id", "seq")
-            if round_bctl:
-                crawled_ids = F.broadcast(crawled_ids)
+            crawled_ids = F.broadcast(crawled_rows.select("request_id", "seq"))
 
             def job_chunks():
                 # broadcast id-join: the heavy extracted rows (chunk text)
@@ -859,15 +805,12 @@ class CrawlRunner:
             def job_frontier():
                 # broadcast the narrow crawled ids; the outlink arrays (the
                 # heavy side, from the fetched cache) stay un-shuffled
-                lp = crawled_rows.select("request_id", "seq", "depth")
-                if round_bctl:
-                    lp = F.broadcast(lp)
+                lp = F.broadcast(crawled_rows.select("request_id", "seq", "depth"))
                 link_parents = fetch_ctl.select("request_id", "seq", "outlinks").join(
                     lp, ["request_id", "seq"]
                 )
                 new_links = admit_links(
-                    link_parents, fold_out, deferred, seen, requests, spark,
-                    broadcast_ctl=round_bctl,
+                    link_parents, fold_out, deferred, seen, requests, spark
                 )
                 seq_base = state.select("request_id", "max_seq")
                 # checkpointed: read by the frontier write AND the max_seq update

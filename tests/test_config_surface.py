@@ -182,3 +182,48 @@ def test_thread_pools_are_scoped():
             if name == "ThreadPoolExecutor" and id(node) not in scoped:
                 loose.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert not loose, "thread pools outside a with: " + ", ".join(loose)
+
+
+def test_session_sets_no_sql_default(spark, monkeypatch):
+    """Every ``spark.sql.*`` value ``get_spark`` sets differs from the
+    default of its SQLConf entry in this JVM, so no setting only restates
+    Spark. A default the JVM computes from its host (the session time zone)
+    is not a restatement: pinning it is the setting's point."""
+    from my_crawler_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def __getattr__(self, name):  # appName, master
+            return lambda *args: self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self
+
+    builder = Builder()
+    monkeypatch.setattr(session, "SparkSession", type("Session", (), {"builder": builder}))
+    session.get_spark()
+    sql = {k: v for k, v in builder.conf.items() if k.startswith("spark.sql.")}
+    assert "spark.sql.shuffle.partitions" in sql
+
+    jvm = spark._jvm
+    entries = (
+        jvm.java.lang.Class.forName("org.apache.spark.sql.internal.SQLConf$")
+        .getField("MODULE$").get(None)
+    )
+    restated = []
+    for key, value in sql.items():
+        entry = entries.getConfigEntry(key)
+        if entry.getClass().getSimpleName() == "ConfigEntryWithDefaultFunction":
+            continue
+        conf = jvm.org.apache.spark.sql.internal.SQLConf()
+        default = conf.getConf(entry)
+        conf.setConfString(key, value)
+        if conf.getConf(entry) == default:
+            restated.append(key)
+    assert not restated, restated

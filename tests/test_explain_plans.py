@@ -212,31 +212,16 @@ def _admit_links_inputs(spark):
 
 
 def test_admit_links_broadcasts_round_control(spark):
-    """With broadcast_ctl, the a(t)/M(t) probes must be BroadcastHashJoins —
-    the (politeness-bounded) fold output broadcasts and the exploded-link
-    side never shuffles for them."""
+    """The a(t)/M(t) probes are BroadcastHashJoins — the (politeness-bounded)
+    fold output broadcasts and the exploded-link side never shuffles for
+    them — and they drop the self link and the link M(t) already reached."""
     from my_crawler_spark.operators.frontier import admit_links
 
-    out = admit_links(*_admit_links_inputs(spark), spark,
-                      bloom=None, broadcast_ctl=True)
+    out = admit_links(*_admit_links_inputs(spark), spark)
     plan = explain_str(out)
     # requests dim + a(t) + M(t) probes — at least three broadcast joins
     assert plan.count("BroadcastHashJoin") >= 3, plan
-
-
-def test_admit_links_shuffle_regime_equals_broadcast(spark):
-    """Without broadcast_ctl (rounds past ROUND_CTL_BROADCAST_ROWS) the merged
-    a(t)/M(t) control relation joins as a ShuffledHashJoin, and the admitted
-    links are exactly the broadcast regime's."""
-    from my_crawler_spark.operators.frontier import admit_links
-
-    inputs = _admit_links_inputs(spark)
-    bcast = admit_links(*inputs, spark, bloom=None, broadcast_ctl=True)
-    shuf = admit_links(*inputs, spark, bloom=None, broadcast_ctl=False)
-    assert "ShuffledHashJoin" in explain_str(shuf)
-    rows = sorted(map(tuple, shuf.collect()))
-    assert rows == sorted(map(tuple, bcast.collect()))
-    assert [r.url for r in shuf.orderBy("url").collect()] == [
+    assert [r.url for r in out.orderBy("url").collect()] == [
         "https://h.example.com/a", "https://h.example.com/b",
     ]
 

@@ -451,7 +451,8 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
     where they were before the first round. Every committed DataFrame, the
     upserted chunks included, plans over checkpoint leaves, not over the
     whole round's lineage. Warm rounds reuse the generated classes of the
-    first instead of compiling them again."""
+    first instead of compiling them again, and a round runs no job that only
+    picks a plan."""
     from my_crawler_spark.plans import crawl_plan
 
     jsc = spark.sparkContext._jsc
@@ -464,10 +465,13 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
     def plan_len(df) -> int:
         return len(df._jdf.queryExecution().optimizedPlan().toString())
 
+    def last_job_id() -> int:
+        return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
     fx = _mini_retry_fixtures(flaky=2, retry_after=8)  # crawls in 3 rounds
     # the fixture's one image has no caption, so its pages index no chunks
     fx["images"] = fx["images"].assign(caption="A page about harbour cranes.")
-    plan_chars, chunk_plan_chars, counts, compiles = [], [], [], []
+    plan_chars, chunk_plan_chars, counts, compiles, jobs = [], [], [], [], []
     upsert = crawl_plan.upsert_chunks_with_stale_delete
 
     def sized_upsert(table, chunks):
@@ -486,7 +490,9 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
         r.admit_requests(fx["seeds"])
         for _ in range(3):
             compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+            job = last_job_id()
             r.run(max_rounds=1)
+            jobs.append(last_job_id() - job)
             compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - compiled)
             counts.append(pinned())
         chunk_rows = r.t_chunks.count_rows()
@@ -505,6 +511,11 @@ def test_round_checkpoints_released_and_commits_plan_over_leaves(
     # cold first round still compiles about 200 and the third about 10. An
     # absolute bound: after earlier tests in this JVM, round 1 compiles ~0
     assert compiles[2] < 50, compiles
+    # jobs per round, from the job ids the status tracker hands out. Rounds
+    # ran 71/70/67 jobs (the same in 3 runs) while each counted its fold
+    # output (two jobs under AQE) only to choose between broadcast and
+    # shuffle joins; with one plan per join they run 68/68/65
+    assert jobs[2] <= 66, jobs
 
 
 def test_round_commits_its_chunks_before_returning(spark, tmp_path, monkeypatch):

@@ -104,9 +104,9 @@ def test_vectorized_gate_equals_per_row_matcher(spark):
         assert got[u] == robots_allowed(body, PRODUCT_TOKEN, u), u
 
 
-def test_robots_gate_shuffle_join_fallback(spark):
-    """Above the broadcast threshold robots is a table, not a dim: the gate
-    must work identically through a plain shuffle join (broadcast=False)."""
+def test_robots_gate_broadcasts_the_dim(spark):
+    """The gate broadcasts the robots dim into its join and gives every row
+    its origin's verdict."""
     from my_crawler_spark.operators.politeness import robots_gate
 
     rows = spark.createDataFrame(
@@ -119,20 +119,18 @@ def test_robots_gate_shuffle_join_fallback(spark):
          for j in range(3)],
         ["origin", "entry_body", "allow_all"],
     )
-    bc = {(r.origin, r.url): r.robots_allowed_flag
-          for r in robots_gate(rows, dim, broadcast=True).collect()}
-    sj = {(r.origin, r.url): r.robots_allowed_flag
-          for r in robots_gate(rows, dim, broadcast=False).collect()}
-    assert bc == sj and len(bc) == 31
-    assert not bc[("https://h0.com", "https://h0.com/private/x")]
-    # and the plan actually switches strategy
+    gated = robots_gate(rows, dim)
+    got = {(r.origin, r.url): r.robots_allowed_flag for r in gated.collect()}
+    assert len(got) == 31
+    assert not got[("https://h0.com", "https://h0.com/private/x")]
+    assert sum(got.values()) == 30
     import contextlib
     from io import StringIO
 
     buf = StringIO()
     with contextlib.redirect_stdout(buf):
-        robots_gate(rows, dim, broadcast=False).explain("formatted")
-    assert "BroadcastHashJoin" not in buf.getvalue()
+        gated.explain("formatted")
+    assert "BroadcastHashJoin" in buf.getvalue()
 
 
 def test_robots_ttl_expiry_flips_verdict_mid_crawl(spark, tmp_path):
@@ -208,7 +206,7 @@ def test_robots_ttl_expiry_flips_verdict_mid_crawl(spark, tmp_path):
 
 
 def _mini_runner(spark, tmp_path, robots_source_fn, robots_pdf, name,
-                 round_duration_secs=50_000):
+                 round_duration_secs=50_000, robots_ttl_dynamic=True):
     import pandas as pd
 
     from my_crawler_spark.fixtures import make_images
@@ -229,7 +227,7 @@ def _mini_runner(spark, tmp_path, robots_source_fn, robots_pdf, name,
         robots_pdf=robots_pdf,
         sitemaps_pdf=pd.DataFrame(columns=["sitemap_url", "kind", "loc", "lastmod"]),
         budgets=spark.createDataFrame([(host, 2)], "host string, tokens_per_round int"),
-        robots_ttl_dynamic=True,
+        robots_ttl_dynamic=robots_ttl_dynamic,
         robots_source_fn=robots_source_fn,
         round_duration_secs=round_duration_secs,
     ), origin
@@ -274,7 +272,7 @@ def test_stale_robots_keeps_original_fetched_at(spark, tmp_path):
         assert cache3.fetched_at == 0, "stale entry must keep original fetched_at"
         assert cache3.ttl_secs == 86_400
 
-        dim4, _ = runner._robots_dim_for_round(4, to_check)  # t=150k: due again
+        dim4 = runner._robots_dim_for_round(4, to_check)  # t=150k: due again
         row = dim4.collect()[0]
         assert origin_allowed(row.entry_body, row.allow_all, PRODUCT_TOKEN,
                               f"{origin}/b/x")
@@ -305,13 +303,12 @@ def test_dynamic_robots_dataframe_source(spark, tmp_path):
 
     runner, origin = _mini_runner(spark, tmp_path, df_source, None, "dfsrc")
     try:
-        assert runner.robots_pdf is None  # DataFrame-native init path
         to_check = spark.createDataFrame([(origin, f"{origin}/b/x")], ["origin", "url"])
-        dim1, _ = runner._robots_dim_for_round(1, to_check)
+        dim1 = runner._robots_dim_for_round(1, to_check)
         r1 = dim1.collect()[0]
         assert not origin_allowed(r1.entry_body, r1.allow_all, PRODUCT_TOKEN,
                                   f"{origin}/b/x")
-        dim3, _ = runner._robots_dim_for_round(3, to_check)  # t=100k: refreshed
+        dim3 = runner._robots_dim_for_round(3, to_check)  # t=100k: refreshed
         r3 = dim3.collect()[0]
         assert origin_allowed(r3.entry_body, r3.allow_all, PRODUCT_TOKEN,
                               f"{origin}/b/x")
@@ -350,7 +347,7 @@ def test_empty_pandas_robots_source_has_schema(spark, tmp_path):
         runner._robots_dim_for_round(1, to_check)
         # round 2 (t=200k): entry expired AND a new origin appears; the
         # empty source must resolve both as 404 allow-all without crashing
-        dim2, _ = runner._robots_dim_for_round(2, to_check)
+        dim2 = runner._robots_dim_for_round(2, to_check)
         rows = {r.origin: r for r in dim2.collect()}
         assert rows["https://new.example.com"].allow_all
     finally:
@@ -393,3 +390,105 @@ def test_robots_gate_mixed_dim_verdicts(spark):
     assert got[("https://h3.example.com", "https://h3.example.com/p3")]
     assert not got[("https://h2.example.com", "https://h2.example.com/p2")]
     assert all(v for (o, _), v in got.items() if o == "https://h4.example.com")
+
+
+def test_robots_policy_column_form_equals_policy_for_status(spark, tmp_path):
+    """Both source shapes, resolved at t=0 and by a dynamic refresh, give
+    each origin the (entry_body, allow_all) of policy_for_status: a 2xx body
+    whose 512 KiB byte cap splits a character ends in U+FFFD, a 2xx row with
+    a null body is an empty body (allow all), and 4xx and 5xx rows keep
+    their policies."""
+    import pandas as pd
+
+    from my_crawler_spark.functions.robots import ROBOTS_MAX_BYTES
+
+    head = "User-agent: *\nDisallow: /b\n#"
+    split = head + "x" * (ROBOTS_MAX_BYTES - 1 - len(head)) + "\u20ac tail"
+    src = pd.DataFrame([
+        {"origin": "https://split.example.com", "status": 200, "body": split},
+        {"origin": "https://null.example.com", "status": 200, "body": None},
+        {"origin": "https://gone.example.com", "status": 404, "body": "x"},
+        {"origin": "https://down.example.com", "status": 503, "body": None},
+    ])
+    want = {
+        r.origin: policy_for_status(r.status, r.body or "", None)[:2]
+        for r in src.itertuples()
+    }
+    assert want["https://split.example.com"][0].endswith("x\ufffd")
+    assert want["https://null.example.com"] == ("", False)
+    to_check = spark.createDataFrame(
+        [(o, f"{o}/b/x") for o in src.origin], ["origin", "url"]
+    )
+    as_df = spark.createDataFrame(src, "origin string, status long, body string")
+    for shape, source in (("pandas", src), ("dataframe", as_df)):
+        for dynamic in (False, True):
+            runner, _ = _mini_runner(
+                spark, tmp_path, lambda now, s=source: s, None,
+                f"{shape}-{dynamic}", robots_ttl_dynamic=dynamic,
+            )
+            try:
+                dim = runner._robots_dim_for_round(1, to_check)
+                got = {r.origin: (r.entry_body, r.allow_all) for r in dim.collect()}
+            finally:
+                runner.close()
+            assert got == want, (shape, dynamic)
+
+
+def test_static_crawl_same_for_both_robots_source_shapes(spark, tmp_path):
+    """A static-mode crawl gives the same visit log whether its robots
+    source is a pandas frame or the same rows as a DataFrame: /b is
+    disallowed, and the host whose robots answered 2xx with no body is
+    crawled."""
+    import pandas as pd
+
+    from my_crawler_spark.fixtures import make_images
+    from my_crawler_spark.plans.crawl_plan import CrawlRunner
+
+    a, b = "https://h7.example.com", "https://h8.example.com"
+    links = [f"{a}/f0", f"{a}/b/x", f"{b}/q0"]
+
+    def page(u, outlinks=()):
+        return {
+            "url": u, "host": u.split("/")[2], "status": 200,
+            "content_type": "text/html", "flaky_fail_times": 0,
+            "body_len": 1000, "image_id": "img-00000000",
+            "outlinks": list(outlinks),
+        }
+
+    pages = pd.DataFrame([page(f"{a}/p0", links)] + [page(u) for u in links])
+    robots = pd.DataFrame([
+        {"origin": a, "status": 200, "body": "User-agent: *\nDisallow: /b\n"},
+        {"origin": b, "status": 200, "body": None},
+    ])
+
+    def crawl(name, robots_source):
+        runner = CrawlRunner(
+            spark, str(tmp_path / name),
+            pages=spark.createDataFrame(pages),
+            redirects=spark.createDataFrame([], "src_url string, dst_url string"),
+            images=spark.createDataFrame(make_images(seed=1, n=1)),
+            robots_pdf=robots_source,
+            sitemaps_pdf=pd.DataFrame(columns=["sitemap_url", "kind", "loc", "lastmod"]),
+            budgets=spark.createDataFrame(
+                [("h7.example.com", 8), ("h8.example.com", 8)],
+                "host string, tokens_per_round int",
+            ),
+        )
+        with runner:
+            runner.admit_requests(pd.DataFrame(
+                [{"request_id": 1, "url": f"{a}/p0", "max_pages": 10,
+                  "max_depth": 3, "same_domain": False}]
+            ))
+            runner.run(max_rounds=5)
+            return sorted(map(tuple, runner.t_visits.read().collect()))
+
+    from_pandas = crawl("pandas", robots)
+    from_df = crawl("dataframe", spark.createDataFrame(
+        robots, "origin string, status long, body string"
+    ))
+    assert from_pandas == from_df
+    outcome = {r[2]: r[4] for r in from_pandas}
+    assert outcome == {
+        f"{a}/p0": "crawled", f"{a}/f0": "crawled", f"{a}/b/x": "robots",
+        f"{b}/q0": "crawled",
+    }

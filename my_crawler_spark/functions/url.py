@@ -43,10 +43,13 @@ FILE_EXTENSIONS = (
 
 # bulk_crawl.py:60-66 default skip patterns (config bulk_crawl_config.json)
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
+_QUERY_FRAGMENT_RE = r"[?#].*$"
+_HOST_RE = _SCHEME_RE + r"([^/:?#]*)"
+_PATH_RE = _SCHEME_RE + r"[^/?#]*(/.*)?$"
 
 
 def _strip_query_fragment(url: Column) -> Column:
-    return F.regexp_replace(url, r"[?#].*$", "")
+    return F.regexp_replace(url, _QUERY_FRAGMENT_RE, "")
 
 
 def url_scheme(url: Column) -> Column:
@@ -61,7 +64,7 @@ def _authority(url: Column) -> Column:
 
 def _path(url: Column) -> Column:
     """Path starting at the first '/' after the authority ('' if none)."""
-    return F.regexp_extract(_strip_query_fragment(url), _SCHEME_RE + r"[^/?#]*(/.*)?$", 2)
+    return F.regexp_extract(_strip_query_fragment(url), _PATH_RE, 2)
 
 
 def canonicalize_url(url: Column) -> Column:
@@ -87,7 +90,7 @@ def canonicalize_url(url: Column) -> Column:
 
 def url_host(url: Column) -> Column:
     """Lowercased host without port."""
-    return F.lower(F.regexp_extract(url, _SCHEME_RE + r"([^/:?#]*)", 2))
+    return F.lower(F.regexp_extract(url, _HOST_RE, 2))
 
 
 def url_origin(url: Column) -> Column:
@@ -117,9 +120,26 @@ def looks_like_file_url(url: Column) -> Column:
     return F.coalesce(last.contains(".") & ext.isin(*FILE_EXTENSIONS), F.lit(False))
 
 
-def url_path_depth(url: Column) -> Column:
-    """Number of non-empty path segments (api/src/ranking.rs:84-99 analogue)."""
-    return F.size(F.filter(F.split(_path(url), "/"), lambda s: s != ""))
+# SQL-text forms, for operators that build a whole row expression in one
+# parse instead of one Py4J call per expression node (operators/search.py).
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash and quote escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def url_host_sql(url: str) -> str:
+    """url_host over the SQL expression ``url``, as SQL text."""
+    return f"lower(regexp_extract({url}, {sql_string(_HOST_RE)}, 2))"
+
+
+def url_path_depth_sql(url: str) -> str:
+    """Number of non-empty path segments (api/src/ranking.rs:84-99
+    analogue) of the SQL expression ``url``, as SQL text."""
+    path = (
+        f"regexp_extract(regexp_replace({url}, {sql_string(_QUERY_FRAGMENT_RE)}, ''), "
+        f"{sql_string(_PATH_RE)}, 2)"
+    )
+    return f"size(array_remove(split({path}, '/'), ''))"
 
 
 # ---------------------------------------------------------------------------

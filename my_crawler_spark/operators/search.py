@@ -14,6 +14,19 @@ so each operator has an exact ANSI-SQL twin for the DuckDB oracle
 - unique_pages + diversify + paginate + knowledge panel:
                   api/src/main.rs:142-206
 - plagiarism    : dense top-5 vs threshold (api/src/main.rs:254-297)
+
+The query chain's operators (bm25_scores, dense_scores, rrf_fuse,
+apply_ranking_boosts, unique_pages_diversified, paginate) write their
+per-row expressions as SQL text, parsed JVM-side in one ``selectExpr`` or
+``F.expr`` call per column. Every ``Column`` method and ``F.*`` call is a
+Py4J round trip: built node by node, one hybrid query (perfbench
+``search_serve``) cost 6,075 JVM commands, 1,790 of them ``dense_scores``
+with its 384 ``F.lit``s and about 1,100 each BM25 call, and about 1 of its
+3-4 CPU-s went to building the DataFrame. As SQL text the whole query takes
+518, 417 of them to build it (the rest read the table and collect). Literals
+keep ``F.lit``'s types (``_lit``: a float is DOUBLE, which a bare SQL
+``0.5`` is not) and the trees keep the Column form's order of operations, so
+every score is the same double.
 """
 
 from __future__ import annotations
@@ -21,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.url import url_host, url_path_depth
+from ..functions.url import sql_string, url_host_sql, url_path_depth_sql
 
 # api/src/ranking.rs:6-13
 URL_LENGTH_BOOST_FACTOR = 0.5
@@ -36,9 +49,17 @@ RRF_K = 60
 TOKEN_SPLIT_RE = "[^a-zA-Z0-9]+"
 
 
-def tokens(col: Column) -> Column:
-    """alnum-split lowercase word list (ranking.rs:87-106 semantics)."""
-    return F.filter(F.split(F.lower(col), TOKEN_SPLIT_RE), lambda t: t != "")
+def _lit(x: float) -> str:
+    """``x`` as SQL text of the type ``F.lit(x)`` gives it: a Python float
+    is DOUBLE (``repr`` round-trips it), an int INT or BIGINT."""
+    return f"({float(x)!r}D)" if isinstance(x, float) else f"({int(x)})"
+
+
+def _tokens_sql(col: str) -> str:
+    """alnum-split lowercase word list (ranking.rs:87-106 semantics) of the
+    SQL expression ``col``; split never yields a null element, so dropping
+    the empty strings needs no lambda."""
+    return f"array_remove(split(lower({col}), {sql_string(TOKEN_SPLIT_RE)}), '')"
 
 
 def bm25_scores(
@@ -67,52 +88,37 @@ def bm25_scores(
     # with no matching term are filtered out).
     # two-step select (the ngrams_from_tokens pattern): materialize the
     # token array once, then take dl + per-term counts off the column —
-    # inlining `tokens(text)` into each of the 5 expressions re-ran the
+    # inlining the tokens into each of the 5 expressions re-ran the
     # split per expression (CollapseProject keeps the split in its own
-    # Project because it is non-cheap and multiply referenced)
-    toked = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks")
-    )
-
-    def _count_of(term):  # 1-arg lambda: a 2-arg one would bind the index
-        return F.size(F.filter(F.col("__toks"), lambda x: x == F.lit(term)))
-
-    per_doc = toked.select(
+    # Project because it is non-cheap and multiply referenced).
+    # Query terms are [a-z0-9]+ (_py_tokens), so they embed unescaped.
+    terms = range(len(q_terms))
+    toked = docs.selectExpr(f"{id_col} AS id", f"{_tokens_sql(text_col)} AS __toks")
+    per_doc = toked.selectExpr(
         "id",
-        F.coalesce(F.size(F.col("__toks")), F.lit(0)).alias("dl"),
+        "coalesce(size(__toks), 0) AS dl",
         *[
-            F.coalesce(_count_of(t), F.lit(0)).alias(f"__tf{i}")
+            f"coalesce(size(filter(__toks, x -> x = '{t}')), 0) AS __tf{i}"
             for i, t in enumerate(q_terms)
         ],
     )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.avg(F.when(F.col("dl") > 0, F.col("dl"))).alias("avgdl"),
-        *[
-            F.sum((F.col(f"__tf{i}") > 0).cast("long")).alias(f"__df{i}")
-            for i in range(len(q_terms))
-        ],
+    stats = per_doc.selectExpr(
+        "count(1) AS __n",
+        "avg(CASE WHEN dl > 0 THEN dl END) AS avgdl",
+        *[f"sum(CAST(__tf{i} > 0 AS BIGINT)) AS __df{i}" for i in terms],
     )
     matched = per_doc.filter(
-        sum((F.col(f"__tf{i}") for i in range(len(q_terms))), F.lit(0)) > 0
+        " + ".join(["0"] + [f"__tf{i}" for i in terms]) + " > 0"
     ).crossJoin(F.broadcast(stats))
-    score = None
-    for i in range(len(q_terms)):
-        tf = F.col(f"__tf{i}")
-        idf = F.log(
-            (F.col("__n").cast("double") - F.col(f"__df{i}") + 0.5)
-            / (F.col(f"__df{i}") + 0.5)
-            + 1.0
-        )
-        w = F.when(
-            tf > 0,
-            idf
-            * (tf * (k1 + 1))
-            / (tf + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        w0 = F.coalesce(w, F.lit(0.0))  # absent term adds exact 0.0
-        score = w0 if score is None else score + w0
-    return matched.select(F.col("id").alias(id_col), score.alias("bm25"))
+    # the absent-term weight is an exact 0.0; terms add in query order
+    score = " + ".join(
+        f"coalesce(CASE WHEN __tf{i} > 0 THEN"
+        f" ln((CAST(__n AS DOUBLE) - __df{i} + 0.5D) / (__df{i} + 0.5D) + 1.0D)"
+        f" * (__tf{i} * {_lit(k1 + 1)})"
+        f" / (__tf{i} + (dl * {_lit(b)} / avgdl + {_lit(1 - b)}) * {_lit(k1)}) END, 0.0D)"
+        for i in terms
+    )
+    return matched.selectExpr(f"id AS {id_col}", f"{score} AS bm25")
 
 
 def _py_tokens(s: str) -> list[str]:
@@ -138,11 +144,18 @@ def dense_scores(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force cosine scan -> (id, cos). The ANN variants live in
-    operators/simsearch.py; this is the exact baseline."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return embeddings.select(
-        F.col(id_col), cosine(F.col(vec_col), q).alias("cos")
+    operators/simsearch.py; this is the exact baseline.
+
+    ``cosine``'s expression as SQL text. The query vector is one string
+    cast to array<double>, which the optimizer folds into a literal; the
+    squares of the float embedding stay float products."""
+    q = "CAST(split('" + ",".join(repr(float(x)) for x in query_vec) + "', ',') AS ARRAY<DOUBLE>)"
+    squares = "0.0D, (acc, x) -> acc + x * x"
+    cos = (
+        f"aggregate(zip_with({vec_col}, {q}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+        f" / (sqrt(aggregate({vec_col}, {squares})) * sqrt(aggregate({q}, {squares})))"
     )
+    return embeddings.selectExpr(id_col, f"{cos} AS cos")
 
 
 def topk(df: DataFrame, score_col: str, k: int, id_col: str) -> DataFrame:
@@ -175,55 +188,14 @@ def rrf_fuse(
 ) -> DataFrame:
     """Weighted RRF: score = Σ_i w_i / (k + rank_i) over lists that contain
     the id (main.rs:208-252 fusion contract, weights [2.0,2.0,1.0])."""
-    parts = []
-    for i, (df, w) in enumerate(ranked):
-        parts.append(
-            df.select(
-                F.col(id_col), (F.lit(w) / (F.lit(k) + F.col("rank"))).alias("contrib")
-            )
-        )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return u.groupBy(id_col).agg(F.sum("contrib").alias("rrf_score"))
+    u = None
+    for df, w in ranked:
+        part = df.selectExpr(id_col, f"{_lit(w)} / ({_lit(k)} + rank) AS contrib")
+        u = part if u is None else u.unionByName(part)
+    return u.groupBy(id_col).agg(F.expr("sum(contrib) AS rrf_score"))
 
 
 # ----------------------------------------------------------------- boosts
-def popularity_boost(rank_col: Column) -> Column:
-    """popularity_boost (ranking.rs:79-82): 1 - ln(rank)/ln(10^6), clamped."""
-    r = F.greatest(F.least(rank_col, F.lit(TRANCO_MAX_RANK)), F.lit(1)).cast("double")
-    return F.lit(POPULARITY_BOOST) * (
-        F.lit(1.0) - F.log(r) / F.log(F.lit(float(TRANCO_MAX_RANK)))
-    )
-
-
-def query_match_coverage(query: str, title: Column, url: Column) -> Column:
-    """query_match_coverage (ranking.rs:84-106): fraction of query terms
-    present in title+url word lists (whole-word, alnum-split, lowercase)."""
-    q_terms = _py_tokens(query)
-    if not q_terms:
-        return F.lit(0.0)
-    words = F.concat(tokens(title), tokens(url))
-    hits = sum(
-        (F.array_contains(words, t).cast("int") for t in q_terms), F.lit(0)
-    )
-    return hits.cast("double") / F.lit(float(len(q_terms)))
-
-
-def root_host_query_match(query: str, title: Column, url: Column) -> Column:
-    """root_host_query_match (ranking.rs:155-175): domain root AND all query
-    terms in host+title words."""
-    q_terms = _py_tokens(query)
-    if not q_terms:
-        return F.lit(False)
-    words = F.concat(tokens(url_host(url)), tokens(title))
-    all_in = None
-    for t in q_terms:
-        c = F.array_contains(words, t)
-        all_in = c if all_in is None else (all_in & c)
-    return (url_path_depth(url) == 0) & all_in
-
-
 def apply_ranking_boosts(
     df: DataFrame,
     query: str,
@@ -232,38 +204,56 @@ def apply_ranking_boosts(
     title_col: str = "page_title",
     ranks_dim: DataFrame | None = None,
 ) -> DataFrame:
-    """apply_ranking_boost (ranking.rs:184-212) as one column expression."""
-    url, title = F.col(url_col), F.col(title_col)
-    depth = url_path_depth(url)
+    """apply_ranking_boost (ranking.rs:184-212) as one column expression.
+
+    - query_match_coverage (ranking.rs:84-106): the fraction of query terms,
+      repeats counted, present in the title+url word lists (whole-word,
+      alnum-split, lowercase);
+    - root_host_query_match (ranking.rs:155-175): a domain root whose
+      host+title words hold every query term;
+    - popularity_boost (ranking.rs:79-82), with ``ranks_dim``:
+      1 - ln(rank)/ln(10^6), rank clamped to [1, 10^6], joined on the
+      normalized host.
+    """
+    q_terms = _py_tokens(query)
+    url, title = url_col, title_col
+    depth = url_path_depth_sql(url)
+    if q_terms:
+        words = f"concat({_tokens_sql(title)}, {_tokens_sql(url)})"
+        host_words = f"concat({_tokens_sql(url_host_sql(url))}, {_tokens_sql(title)})"
+        hits = " + ".join(["0"] + [f"CAST(array_contains({words}, '{t}') AS INT)" for t in q_terms])
+        coverage = f"CAST({hits} AS DOUBLE) / {_lit(float(len(q_terms)))}"
+        all_in = " AND ".join(f"array_contains({host_words}, '{t}')" for t in q_terms)
+        root_match = f"({depth} = 0) AND ({all_in})"
+    else:
+        coverage, root_match = "0.0D", "false"
     boosted = (
-        F.col(score_col)
-        + F.lit(URL_LENGTH_BOOST_FACTOR) / F.greatest(F.length(url), F.lit(1)).cast("double")
-        + F.when(depth == 0, F.lit(DOMAIN_ROOT_BOOST)).otherwise(F.lit(0.0))
-        + F.when(root_host_query_match(query, title, url), F.lit(ROOT_HOST_MATCH_BOOST)).otherwise(F.lit(0.0))
-        - F.when(depth > 0, depth.cast("double") * PATH_DEPTH_PENALTY).otherwise(F.lit(0.0))
-        + F.lit(EXACT_MATCH_BOOST) * query_match_coverage(query, title, url)
+        f"{score_col}"
+        f" + {_lit(URL_LENGTH_BOOST_FACTOR)} / CAST(greatest(length({url}), 1) AS DOUBLE)"
+        f" + CASE WHEN {depth} = 0 THEN {_lit(DOMAIN_ROOT_BOOST)} ELSE 0.0D END"
+        f" + CASE WHEN {root_match} THEN {_lit(ROOT_HOST_MATCH_BOOST)} ELSE 0.0D END"
+        f" - CASE WHEN {depth} > 0 THEN CAST({depth} AS DOUBLE) * {_lit(PATH_DEPTH_PENALTY)}"
+        f" ELSE 0.0D END"
+        f" + {_lit(EXACT_MATCH_BOOST)} * ({coverage})"
     )
-    out = df.withColumn("score", boosted)
+    out = df.withColumn("score", F.expr(boosted))
     if ranks_dim is not None:
         # normalize_host (ranking.rs:74-78): strip trailing dot + www.
-        host = F.regexp_replace(
-            F.regexp_replace(url_host(url), r"\.$", ""), r"^www\.", ""
-        )
+        def normalize(host: str) -> str:
+            dot, www = sql_string(r"\.$"), sql_string(r"^www\.")
+            return f"regexp_replace(regexp_replace({host}, {dot}, ''), {www}, '')"
+
         dim = F.broadcast(
-            ranks_dim.select(
-                F.regexp_replace(
-                    F.regexp_replace(F.lower(F.col("domain")), r"\.$", ""), r"^www\.", ""
-                ).alias("__h"),
-                F.col("rank").alias("__r"),
-            )
+            ranks_dim.selectExpr(f"{normalize('lower(domain)')} AS __h", "rank AS __r")
+        )
+        r = f"CAST(greatest(least(__r, {_lit(TRANCO_MAX_RANK)}), 1) AS DOUBLE)"
+        popularity = (
+            f"{_lit(POPULARITY_BOOST)}"
+            f" * (1.0D - ln({r}) / ln({_lit(float(TRANCO_MAX_RANK))}))"
         )
         out = (
-            out.join(dim, host == F.col("__h"), "left")
-            .withColumn(
-                "score",
-                F.col("score")
-                + F.coalesce(popularity_boost(F.col("__r")), F.lit(0.0)),
-            )
+            out.join(dim, F.expr(f"{normalize(url_host_sql(url))} = __h"), "left")
+            .withColumn("score", F.expr(f"score + coalesce({popularity}, 0.0D)"))
             .drop("__h", "__r")
         )
     return out
@@ -280,36 +270,29 @@ def unique_pages_diversified(
     the first <=5 distinct-host results move to the front (first-seen per
     host in rank order); everything else follows in original rank order.
     Output adds ``out_rank`` (the final presentation order)."""
-    w_url = Window.partitionBy(url_col).orderBy(rank_col)
-    uniq = df.withColumn("__rn", F.row_number().over(w_url)).filter(
-        F.col("__rn") == 1
-    ).drop("__rn")
-    host = F.coalesce(url_host(F.col(url_col)), F.col(url_col))
-    w_host = Window.partitionBy(host).orderBy(rank_col)
-    w_first = Window.orderBy(rank_col)
-    flagged = uniq.withColumn("__host_rn", F.row_number().over(w_host)).withColumn(
-        "__first_rank",
-        F.when(F.col("__host_rn") == 1, F.row_number().over(w_first)).otherwise(F.lit(None)),
-    )
+    row = lambda spec: F.expr(f"row_number() OVER ({spec})")  # noqa: E731
+    host = f"coalesce({url_host_sql(url_col)}, {url_col})"
     # rank (by rank_col) among first-per-host rows decides the <=5 picks
-    w_fph = Window.partitionBy(F.lit(1)).orderBy(
-        F.when(F.col("__host_rn") == 1, F.col(rank_col)).otherwise(F.lit(None)).asc_nulls_last()
-    )
-    flagged = flagged.withColumn(
-        "__diverse_pos", F.when(F.col("__host_rn") == 1, F.row_number().over(w_fph))
-    )
-    picked = F.col("__diverse_pos").isNotNull() & (F.col("__diverse_pos") <= diverse_slots)
-    w_out = Window.orderBy(F.when(picked, F.lit(0)).otherwise(F.lit(1)), F.col(rank_col))
+    first_per_host = f"CASE WHEN __host_rn = 1 THEN {rank_col} ELSE NULL END ASC NULLS LAST"
+    picked = f"__diverse_pos IS NOT NULL AND __diverse_pos <= {_lit(diverse_slots)}"
     return (
-        flagged.withColumn("out_rank", F.row_number().over(w_out))
-        .drop("__host_rn", "__first_rank", "__diverse_pos")
+        df.withColumn("__rn", row(f"PARTITION BY {url_col} ORDER BY {rank_col}"))
+        .filter("__rn = 1")
+        .drop("__rn")
+        .withColumn("__host_rn", row(f"PARTITION BY {host} ORDER BY {rank_col}"))
+        .withColumn("__diverse_pos", F.expr(
+            "CASE WHEN __host_rn = 1 THEN row_number()"
+            f" OVER (PARTITION BY 1 ORDER BY {first_per_host}) END"
+        ))
+        .withColumn("out_rank", row(f"ORDER BY CASE WHEN {picked} THEN 0 ELSE 1 END, {rank_col}"))
+        .drop("__host_rn", "__diverse_pos")
     )
 
 
 def paginate(df: DataFrame, limit: int, offset: int, order_col: str = "out_rank") -> DataFrame:
     """page() (main.rs:157-159): skip(offset).take(limit) AFTER dedup."""
     return df.filter(
-        (F.col(order_col) > offset) & (F.col(order_col) <= offset + limit)
+        f"{order_col} > {_lit(offset)} AND {order_col} <= {_lit(offset + limit)}"
     )
 
 
@@ -401,7 +384,7 @@ def inverted_postings(
     (-tf, doc_id) keys, so no per-group sort task.
     """
     tf = (
-        docs.select(F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("term"))
+        docs.selectExpr(f"{id_col} AS doc", f"explode({_tokens_sql(text_col)}) AS term")
         .groupBy("term", "doc")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -468,7 +451,7 @@ def refresh_postings(
             old_docs[id_col].cast("string") == F.col("key"),
             "left_semi",
         )
-        .select(F.explode(tokens(F.col(text_col))).alias("term"))
+        .selectExpr(f"explode({_tokens_sql(text_col)}) AS term")
         .distinct()
     )
     new_touch = (
@@ -477,16 +460,14 @@ def refresh_postings(
             new_docs[id_col].cast("string") == F.col("key"),
             "left_semi",
         )
-        .select(F.explode(tokens(F.col(text_col))).alias("term"))
+        .selectExpr(f"explode({_tokens_sql(text_col)}) AS term")
         .distinct()
     )
     touched = old_touch.union(new_touch).distinct()
 
     kept = index.join(touched, "term", "left_anti")
 
-    new_terms = new_docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
-    )
+    new_terms = new_docs.selectExpr(id_col, f"explode({_tokens_sql(text_col)}) AS term")
     candidates = new_docs.join(
         new_terms.join(touched, "term", "left_semi").select(id_col).distinct(),
         id_col,

@@ -224,7 +224,7 @@ class CrawlRunner:
         self.robots_ttl_dynamic = robots_ttl_dynamic
         self.robots_source_fn = robots_source_fn or (lambda now: robots_pdf)
         self.round_duration_secs = round_duration_secs
-        self.robots_dim = self._resolve_policies(self._source_df(0)).select(
+        self.robots_dim = self._resolve_policies(self._source_df(0), 0).select(
             "origin", "entry_body", "allow_all"
         )
         self.sitemaps_pdf = sitemaps_pdf
@@ -478,22 +478,44 @@ class CrawlRunner:
         )
         return F.make_valid_utf8(capped.cast("string"))
 
-    def _resolve_policies(self, src: DataFrame) -> DataFrame:
-        """policy_for_status (robots.rs:100-134) in COLUMN form, no-stale
-        case: 2xx parse 24 h / 4xx allow-all 24 h / else disallow 5 min."""
+    def _resolve_policies(
+        self, src: DataFrame, now: int, stale: DataFrame | None = None
+    ) -> DataFrame:
+        """policy_for_status (robots.rs:100-134) in COLUMN form: 2xx parse
+        24 h / 4xx allow-all 24 h / else the origin's stale entry if
+        ``stale`` (origin, __stale, __stale_at, __stale_ttl) holds one, or
+        disallow 5 min. -> (origin, entry_body, allow_all, ttl_secs,
+        fetched_at); an origin with no source row is a 404 fetch.
+
+        A 5xx with a stale body keeps the WHOLE stale entry — including its
+        original (already-expired) fetched_at/ttl, so the origin is due for
+        re-fetch on its next access instead of freezing the stale body for a
+        fresh 24 h (robots.rs:119-123 re-inserts `stale` unchanged)."""
+        if stale is None:
+            stale_body = F.lit(None).cast("string")
+            stale_at = stale_ttl = F.lit(None).cast("long")
+        else:
+            src = src.join(stale, "origin", "left")
+            stale_body, stale_at, stale_ttl = (
+                F.col("__stale"), F.col("__stale_at"), F.col("__stale_ttl")
+            )
         status = F.coalesce(F.col("status"), F.lit(404))
         is_2xx = (status >= 200) & (status < 300)
         is_4xx = (status >= 400) & (status < 500)
+        stale_hit = ~is_2xx & ~is_4xx & stale_body.isNotNull()
         return src.select(
             "origin",
             F.when(is_2xx, self._truncated_body())
-            .otherwise(F.lit(None).cast("string"))
+            .when(is_4xx, F.lit(None).cast("string"))
+            .otherwise(stale_body)
             .alias("entry_body"),
             F.when(is_4xx, F.lit(True)).otherwise(F.lit(False)).alias("allow_all"),
-            F.when(is_2xx | is_4xx, F.lit(ROBOTS_OK_TTL_SECS))
-            .otherwise(F.lit(ROBOTS_FAIL_TTL_SECS))
+            F.when(stale_hit, stale_ttl)
+            .when(~is_2xx & ~is_4xx, F.lit(ROBOTS_FAIL_TTL_SECS))
+            .otherwise(F.lit(ROBOTS_OK_TTL_SECS))
             .cast("long")
             .alias("ttl_secs"),
+            F.when(stale_hit, stale_at).otherwise(F.lit(now)).cast("long").alias("fetched_at"),
         )
 
     def _robots_dim_for_round(self, round_no: int, to_check: DataFrame) -> DataFrame:
@@ -522,36 +544,8 @@ class CrawlRunner:
             F.col("fetched_at").alias("__stale_at"),
             F.col("ttl_secs").alias("__stale_ttl"),
         )
-        src = self._source_df(now)
-        status = F.coalesce(F.col("status"), F.lit(404))  # no row = 404 fetch
-        is_2xx = (status >= 200) & (status < 300)
-        is_4xx = (status >= 400) & (status < 500)
-        # 5xx with a stale body keeps the WHOLE stale entry — including its
-        # original (already-expired) fetched_at/ttl, so the origin is due
-        # for re-fetch on its next access instead of freezing the stale
-        # body for a fresh 24 h (robots.rs:119-123 re-inserts `stale`
-        # unchanged).
-        stale_hit = ~is_2xx & ~is_4xx & F.col("__stale").isNotNull()
-        resolved = (
-            needed.join(F.broadcast(src), "origin", "left")
-            .join(stale, "origin", "left")
-            .select(
-                "origin",
-                F.when(is_2xx, self._truncated_body())
-                .when(is_4xx, F.lit(None).cast("string"))
-                .otherwise(F.col("__stale"))
-                .alias("entry_body"),
-                F.when(is_4xx, F.lit(True)).otherwise(F.lit(False)).alias("allow_all"),
-                F.when(stale_hit, F.col("__stale_ttl"))
-                .when(~is_2xx & ~is_4xx, F.lit(ROBOTS_FAIL_TTL_SECS))
-                .otherwise(F.lit(ROBOTS_OK_TTL_SECS))
-                .cast("long")
-                .alias("ttl_secs"),
-                F.when(stale_hit, F.col("__stale_at"))
-                .otherwise(F.lit(now))
-                .cast("long")
-                .alias("fetched_at"),
-            )
+        resolved = self._resolve_policies(
+            needed.join(F.broadcast(self._source_df(now)), "origin", "left"), now, stale
         )
         # expired entries NOT touched this round stay cached: their body is
         # the stale-if-error fallback for a future refresh (robots.rs:119-123)

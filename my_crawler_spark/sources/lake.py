@@ -156,7 +156,9 @@ class SnapshotTable:
             df = self.spark.read.schema(self.schema).parquet(*dirs)
             for i in applicable:
                 del_dir, _seq, key_cols = deletes[i]
-                kdf = self.spark.read.parquet(del_dir)
+                # the keys' schema is the table's, so no inference job runs
+                keys = StructType([self.schema[c] for c in key_cols])
+                kdf = self.spark.read.schema(keys).parquet(del_dir)
                 df = df.join(F.broadcast(kdf), list(key_cols), "left_anti")
             parts.append(df)
         out = parts[0]

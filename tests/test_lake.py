@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,6 +37,21 @@ def test_read_without_data_starts_no_task(spark, tmp_path):
         df = t.read()
         assert df.schema == SCHEMA and df.rdd.getNumPartitions() == 0
         t.commit(spark.createDataFrame([], SCHEMA))
+
+
+def test_read_with_deletes_starts_no_job(spark, tmp_path):
+    """A read of a table with an equality-delete file starts no Spark job:
+    the delete file is read with the key columns' schema taken from the
+    table's, so Parquet schema inference does not run."""
+    t = SnapshotTable(spark, str(tmp_path), "t5", SCHEMA)
+    t.commit(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))
+    t.merge_upsert(spark.createDataFrame([(2, "B"), (3, "c")], SCHEMA), ["k"])
+    assert any(d.startswith("delete-") for d in os.listdir(t.dir))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df = t.read()
+    assert dag.nextJobId() == before
+    assert sorted((r.k, r.v) for r in df.collect()) == [(1, "a"), (2, "B"), (3, "c")]
 
 
 def test_overwrite(spark, tmp_path):

@@ -4,6 +4,8 @@ api/src/ranking.rs:231-432 behavior tests."""
 from __future__ import annotations
 
 import math
+import re
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -198,3 +200,165 @@ def test_refresh_postings_equals_full_rebuild(spark):
             for r in df.collect()
         }
         assert as_map(got) == as_map(want)
+
+
+def test_building_the_query_chain_stays_cheap(spark, monkeypatch):
+    """Building (not running) one hybrid query's operators costs a few
+    hundred Py4J commands. Each Column or F.* call is a JVM round trip; the
+    operators write their row expressions as SQL text, so a whole query
+    built node by node (about 6,000 commands) fails here. Memory-release
+    commands ("m\\n") fire at GC time, so they are not counted."""
+    import py4j.clientserver
+
+    docs = spark.createDataFrame(
+        [(1, "spark engine", "https://www.h1.example.com/a", "Spark", [0.5] * 384)],
+        "point_id long, chunk_content string, source_url string, "
+        "page_title string, embedding array<float>",
+    )
+    ranks = spark.createDataFrame([(1, "h1.example.com")], "rank long, domain string")
+    vec = [((i * 37) % 101) / 101.0 - 0.5 for i in range(384)]
+    order = lambda c: [F.desc(c), F.col("point_id")]  # noqa: E731
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    q = "spark engine"
+    body = S.ranked_topk(
+        S.bm25_scores(docs, q, id_col="point_id", text_col="chunk_content"), order("bm25"), 40)
+    title = S.ranked_topk(
+        S.bm25_scores(docs, q, id_col="point_id", text_col="page_title"), order("bm25"), 40)
+    dense = S.ranked_topk(S.dense_scores(docs, vec, id_col="point_id"), order("cos"), 40)
+    fused = S.rrf_fuse([(body, 2.0), (title, 2.0), (dense, 1.0)], "point_id")
+    boosted = S.apply_ranking_boosts(
+        fused.join(docs.select("point_id", "source_url", "page_title"), "point_id"),
+        q, score_col="rrf_score", ranks_dim=ranks,
+    )
+    S.paginate(S.unique_pages_diversified(S.ranked_topk(boosted, order("score"), 40)), 10, 0)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 600, len(sent)
+
+
+def _f32(x: float) -> float:
+    return struct.unpack("f", struct.pack("f", x))[0]
+
+
+def test_dense_scores_equal_left_to_right_cosine(spark):
+    """cos is the float64 cosine summed left to right over float32 squares
+    of the embedding (the JVM's aggregate; the benchmark's pandas twin
+    sums the same way), to the last bit, for query components such as 1/3
+    that need all 17 digits and 1e-300 whose square underflows."""
+    q = [0.1, 1 / 3, 1e-300, -2.5e-8, 7.0] * 76 + [0.2, -1 / 7, 3.0, 1e-300]
+    embs = {
+        1: [((i * 7919) % 1013) / 1013.0 - 0.5 for i in range(384)],
+        2: [1 / 3 if i % 2 else 1e-30 for i in range(384)],
+    }
+    df = spark.createDataFrame(
+        [(k, v) for k, v in embs.items()], "vec_id long, embedding array<float>"
+    )
+    scored = S.dense_scores(df, q)
+    # the query vector is folded into one literal before execution
+    assert "split(" not in scored._jdf.queryExecution().optimizedPlan().toString()
+    got = {r.vec_id: r.cos for r in scored.collect()}
+    for k, e in embs.items():
+        e32 = [_f32(x) for x in e]
+        dot = na = nb = 0.0
+        for a, b in zip(e32, q):
+            dot += a * b
+        for a in e32:
+            na += _f32(a * a)
+        for b in q:
+            nb += b * b
+        assert got[k] == dot / (math.sqrt(na) * math.sqrt(nb)), k
+
+
+def _ln(spark):
+    """The JVM's natural log (Spark's ln is StrictMath.log, fdlibm), which
+    may differ in the last bit from the C library's."""
+    return spark.sparkContext._jvm.java.lang.StrictMath.log
+
+
+def test_bm25_scores_exact(spark):
+    """bm25 per doc, to the last bit: a repeated query term counts once, a
+    null and an empty text count in n but not in avgdl, and only docs
+    holding a query term are scored."""
+    rows = [
+        (1, "Spark engine, spark!"),
+        (2, "the engine of data"),
+        (3, None),
+        (4, ""),
+        (5, "gardening tips and engines"),
+        (6, "SPARK"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: r.bm25 for r in S.bm25_scores(docs, "spark Engine SPARK").collect()}
+    ln = _ln(spark)
+    toks = {i: [t.lower() for t in re.split("[^a-zA-Z0-9]+", s or "") if t] for i, s in rows}
+    dls = [len(t) for t in toks.values() if t]
+    n, avgdl = float(len(rows)), sum(dls) / len(dls)
+    k1, b = 1.2, 0.75
+    want = {}
+    for i, words in toks.items():
+        ws = []
+        for term in ("spark", "engine"):  # in query order, once each
+            tf = words.count(term)
+            df = sum(term in w for w in toks.values())
+            idf = ln((n - df + 0.5) / (df + 0.5) + 1.0)
+            w = idf * (tf * (k1 + 1)) / (tf + (len(words) * b / avgdl + (1 - b)) * k1)
+            ws.append(w if tf > 0 else 0.0)
+        if any(t in words for t in ("spark", "engine")):
+            want[i] = ws[0] + ws[1]
+    assert sorted(want) == [1, 2, 6]
+    assert got == want
+
+
+def test_ranking_boosts_exact_with_normalized_hosts(spark):
+    """Every boost to the last bit, with the popularity join normalizing
+    both sides: a www. host and a trailing-dot host match an upper-case
+    ranks-dim domain written with the other form, ranks clamp to
+    [1, 10^6], and coverage counts a repeated query term twice."""
+    rows = [
+        (0.25, "https://www.h1.example.com/", "Spark Engine"),
+        (0.5, "https://h2.example.com./docs/a", "engine notes"),
+        (0.0, "https://h3.example.com/x/y/z?q=spark#f", "nothing"),
+        (1.0, "https://h4.example.com/", "h4 spark"),
+    ]
+    df = spark.createDataFrame(rows, "score double, source_url string, page_title string")
+    ranks = spark.createDataFrame(
+        [(7, "H1.EXAMPLE.COM."), (1000, "WWW.H2.Example.com"), (5_000_000, "h4.example.com")],
+        "rank long, domain string",
+    )
+    query = "spark engine spark"
+    got = {r.source_url: r.score
+           for r in S.apply_ranking_boosts(df, query, ranks_dim=ranks).collect()}
+    ln = _ln(spark)
+    q = ["spark", "engine", "spark"]
+    rank_of = {"h1.example.com": 7, "h2.example.com": 1000, "h4.example.com": 5_000_000}
+    words_of = lambda s: [t for t in re.split("[^a-z0-9]+", s.lower()) if t]  # noqa: E731
+    want = {}
+    for score, url, title in rows:
+        host = re.match(r"https://([^/:?#]*)", url).group(1).lower()
+        path = re.sub(r"[?#].*$", "", url)[len("https://") + len(host):]
+        depth = len([s for s in path.split("/") if s])
+        words = words_of(title) + words_of(url)
+        host_words = words_of(host) + words_of(title)
+        cov = float(sum(int(t in words) for t in q)) / float(len(q))
+        root = depth == 0 and all(t in host_words for t in q)
+        s = (
+            score
+            + 0.5 / float(max(len(url), 1))
+            + (1.25 if depth == 0 else 0.0)
+            + (2.0 if root else 0.0)
+            - (float(depth) * 0.12 if depth > 0 else 0.0)
+            + 3.0 * cov
+        )
+        norm = re.sub(r"^www\.", "", re.sub(r"\.$", "", host))
+        if norm in rank_of:
+            r = float(max(min(rank_of[norm], 1_000_000), 1))
+            s = s + 1.0 * (1.0 - ln(r) / ln(1_000_000.0))
+        want[url] = s
+    assert got == want

@@ -87,6 +87,6 @@ def test_origin_and_same_origin(spark):
 
 def test_path_depth(spark):
     df = spark.createDataFrame([("https://a.com/a/b/c",), ("https://a.com/",)], ["url"])
-    got = [r.d for r in df.select(U.url_path_depth(F.col("url")).alias("d")).collect()]
+    got = [r.d for r in df.selectExpr(f"{U.url_path_depth_sql('url')} AS d").collect()]
     assert got == [3, 0]
 

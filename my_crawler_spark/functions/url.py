@@ -74,10 +74,10 @@ def canonicalize_url(url: Column) -> Column:
     ``isNotNull`` exactly where the reference returns ``None``.
     """
     url = F.trim(url)  # Url::parse trims leading/trailing C0/space
-    # Keep the tree small: reusing a Column copies its whole tree, and
-    # admit_links' pushed-down filters copy this one once per conjunct; past
-    # a few dozen regexes the generated filter method exceeds Java's 64 KB
-    # limit and Spark falls back to interpreted execution.
+    # Keep the tree small: reusing a Column copies its whole tree, and a
+    # filter pushed below the projection that computes it copies it once per
+    # conjunct; past a few dozen regexes the generated filter method exceeds
+    # Java's 64 KB limit and Spark falls back to interpreted execution.
     # lowercased scheme://authority, default port dropped (web_visitor.rs:293-298)
     origin = F.lower(F.regexp_extract(url, _SCHEME_RE + r"[^/?#]*", 0))
     origin = F.regexp_replace(

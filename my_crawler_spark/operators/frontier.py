@@ -193,25 +193,19 @@ def admit_links(
     # extract_links filters (web_visitor.rs:315-331): scheme drop happens via
     # canonicalize returning NULL; file-URL drop; then enqueue trap filter.
     #
-    # The repartition makes the canonical url a plain attribute for what
-    # follows the exchange: the same-origin gate and both anti-join keys read
-    # the exchanged column, and the seen anti-join keys on the same
-    # (request_id, url). It is no barrier for the filters: Catalyst pushes
-    # `isNotNull` and the file and trap conjuncts through the exchange and
-    # the projection into one Filter below the exchange, which evaluates the
-    # canonicalize_url tree once per conjunct (FilterExec shares no
-    # subexpressions across conjuncts); the projection evaluates it once
-    # more. That is why the tree must stay small (see canonicalize_url).
+    # The canonical url is the generator's output, so it is computed once
+    # per link: a filter on a Generate output cannot be pushed beneath it.
+    # Computed in a projection, Catalyst would push `isNotNull` and the file
+    # and trap conjuncts below it with the canonicalize_url tree substituted
+    # into each, evaluating the URL regexes once per conjunct.
     links = (
         crawled_rows.select(
             "request_id",
             F.col("seq").alias("parent_seq"),
             F.col("depth").alias("parent_depth"),
-            F.posexplode("outlinks").alias("link_idx", "href"),
+            F.posexplode(F.transform("outlinks", canonicalize_url)).alias("link_idx", "url"),
         )
-        .withColumn("url", canonicalize_url(F.col("href")))
         .filter(F.col("url").isNotNull())
-        .drop("href")
         .repartition("request_id", "url")
         .filter(~looks_like_file_url(F.col("url")))
         .filter(~is_crawl_trap(F.col("url")))  # enqueue trap gate (crawl_loop.rs:263)
@@ -293,7 +287,7 @@ def admit_links(
     return (
         links.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", "href")
+        .drop("__rn")
         .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
         .withColumn("host", url_host(F.col("url")))
         .drop("parent_depth")

@@ -11,7 +11,7 @@ implements the same *contract* on plain parquet with an atomic manifest:
   model as an Iceberg append);
 - ``read(snapshot_id=None)`` gives any historical snapshot (time travel),
   which is exactly what crawl resume needs;
-- ``merge_upsert`` / ``delete_stale_versions`` mirror the reference's
+- ``merge_upsert`` / ``upsert_chunks_with_stale_delete`` mirror the reference's
   Qdrant upsert + stale-version delete (spider/src/qdrant.rs:130-139) as
   MERGE INTO-equivalents.
 
@@ -22,26 +22,24 @@ delete_where / history``, all of which map 1:1 onto Iceberg SQL
 manifest publish uses ``os.replace`` — atomic on POSIX — standing in for
 the catalog's atomic swap.
 
-Merge-on-read upsert (Iceberg v2 equality deletes): ``merge_upsert``
-APPENDS the new rows plus a tiny *equality-delete file* (the matched
-keys) instead of rewriting the table. ``read`` anti-joins each data dir
-against the delete files published after it (a delete applies only to
-rows older than itself, exactly Iceberg's sequence-number rule), and the
-table self-compacts back to a flat scan once deletes pile past a
-threshold. This is the difference between O(round) and O(table) disk
-writes per crawl round: a copy-on-write upsert of a 100 TB chunks table
-rewrites 100 TB every round, while MOR writes the round's rows + a
-keys file. When a merge matches nothing (the common case inside one
-crawl run — url_seen guarantees each page is extracted once), no delete
-file is written at all and ``read`` stays a single parquet scan.
+Copy-on-write upsert: ``merge_upsert`` applies its deletes when it writes,
+as the reference's delete does, so every ``read`` is one flat parquet scan.
+A merge rewrites only the data dirs that hold a matched key and keeps every
+other dir as it is; when nothing matches (every round of one crawl run,
+where url_seen means no page is extracted twice) it is a plain append. The
+merge-on-read shape this replaced (equality-delete files that each read
+anti-joined again) cost every read it served: a ``search_serve`` query,
+which reads the chunks table five times, planned five scan -> anti-join ->
+union copies, 8 jobs and 14 stages where the flat scan takes 7 and 13, and
+its median CPU fell from 2.5 s to 1.7 s without them (12 paired runs,
+4-core VM).
 
 Commit cost model: ``commit`` runs exactly ONE Spark action (the write);
-``merge_upsert`` runs two (the matched-keys write — a column-pruned scan
-of only the key columns — and the data write), both O(round), never
-O(table). Row counts come from the parquet footers driver-side
-(``last_rows`` / ``count_rows``), never from a second ``count()`` job —
-at 1000 executors the per-round fixed cost is dominated by action count,
-not data volume.
+``merge_upsert`` runs two when nothing matches (the matched-dirs collect —
+a column-pruned scan of only the key columns and file paths — and the data
+write) and three when something does (plus the rewrite of the matched
+dirs). Row counts come from the parquet footers driver-side (``last_rows``
+/ ``count_rows``), never from a second ``count()`` job.
 """
 
 from __future__ import annotations
@@ -51,6 +49,7 @@ import os
 import shutil
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,11 +65,6 @@ def _footer_rows(data_dir: str) -> int:
         if f.endswith(".parquet"):
             total += pq.ParquetFile(os.path.join(data_dir, f)).metadata.num_rows
     return total
-
-
-#: merge_upsert self-compacts (fold deletes back into a flat rewrite) once
-#: a snapshot carries this many delete files — bounds read-side anti-joins.
-MOR_COMPACT_DELETES = int(os.environ.get("SPARK_GRAFT_MOR_COMPACT", "16"))
 
 
 class SnapshotTable:
@@ -99,24 +93,29 @@ class SnapshotTable:
 
     @staticmethod
     def _entries(manifest: dict) -> tuple[list, list]:
-        """-> (data, deletes): data = [[dir, seq], ...]; deletes =
-        [[dir, seq, key_cols], ...]. Reads both manifest formats (v1 kept
-        only a flat data_dirs list — treat those dirs as seq 0)."""
-        if "data" in manifest:
-            return list(manifest["data"]), list(manifest.get("deletes", []))
-        return [[d, 0] for d in manifest.get("data_dirs", [])], []
+        """-> (data dirs, equality-delete entries). Every manifest format
+        lists its dirs under ``data_dirs``; only tables written by the
+        earlier merge-on-read ``merge_upsert`` list deletes."""
+        return list(manifest.get("data_dirs", [])), list(manifest.get("deletes", []))
 
-    def _publish(self, data: list, deletes: list, parent: int) -> int:
+    def _data_dirs(self, snap: int) -> list[str]:
+        """Data dirs of snapshot ``snap`` (none for snapshot 0)."""
+        if not snap:
+            return []
+        dirs, deletes = self._entries(self._manifest(snap))
+        if deletes:
+            # silently scanning the dirs would bring back every row those
+            # deletes removed (stale chunk versions, for the chunks table)
+            raise ValueError(
+                f"table {self.name!r} snapshot {snap} lists {len(deletes)} "
+                "equality-delete file(s); this layer applies deletes at write "
+                "time and cannot read them — rebuild the table"
+            )
+        return dirs
+
+    def _publish(self, dirs: list[str], parent: int) -> int:
         snap = parent + 1
-        manifest = {
-            "snapshot": snap,
-            "parent": parent,
-            "data": data,
-            "deletes": deletes,
-            # v1 field kept so older readers (and humans) still see the dirs
-            "data_dirs": [d for d, _ in data],
-            "ts": time.time(),
-        }
+        manifest = {"snapshot": snap, "parent": parent, "data_dirs": dirs, "ts": time.time()}
         path = os.path.join(self.dir, f"v{snap}.json")
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
@@ -128,140 +127,98 @@ class SnapshotTable:
         os.replace(cur_tmp, self._current_path())
         return snap
 
+    def _write(self, df: DataFrame) -> tuple[list[str], int]:
+        """Write df as a new data dir -> ([dir], rows), or ([], 0) with the
+        dir removed when df has no rows."""
+        data_dir = os.path.join(self.dir, f"data-{uuid.uuid4().hex[:12]}")
+        df.write.mode("overwrite").parquet(data_dir)
+        rows = _footer_rows(data_dir)
+        if rows == 0:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            return [], 0
+        return [data_dir], rows
+
     # -- public API ------------------------------------------------------------
     def read(self, snapshot_id: int | None = None) -> DataFrame:
-        """Snapshot scan. With no delete files this is ONE parquet scan of
-        all data dirs. With equality deletes, each data dir group is
-        anti-joined against the delete files published after it (Iceberg's
-        sequence-number rule: a delete applies only to older data files);
-        join count is bounded by the compaction threshold."""
+        """Snapshot scan: ONE parquet scan of the snapshot's data dirs
+        (deletes were applied when they were written)."""
         snap = self.current_snapshot() if snapshot_id is None else snapshot_id
-        data, deletes = self._entries(self._manifest(snap)) if snap else ([], [])
-        if not data:
+        dirs = self._data_dirs(snap)
+        if not dirs:
             # no partitions, so a job over it starts no Python task (a local
             # list would be parallelized through a Python worker per core)
             return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), self.schema)
-        if not deletes:
-            return self.spark.read.schema(self.schema).parquet(*[d for d, _ in data])
-        # group data dirs by WHICH deletes apply to them -> one scan + the
-        # minimal set of anti-joins per group
-        groups: dict[tuple, list[str]] = {}
-        for d, s in data:
-            applicable = tuple(
-                i for i, (_, dseq, _k) in enumerate(deletes) if dseq > s
-            )
-            groups.setdefault(applicable, []).append(d)
-        parts = []
-        for applicable, dirs in groups.items():
-            df = self.spark.read.schema(self.schema).parquet(*dirs)
-            for i in applicable:
-                del_dir, _seq, key_cols = deletes[i]
-                # the keys' schema is the table's, so no inference job runs
-                keys = StructType([self.schema[c] for c in key_cols])
-                kdf = self.spark.read.schema(keys).parquet(del_dir)
-                df = df.join(F.broadcast(kdf), list(key_cols), "left_anti")
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        # anti-joins move key columns to the front — restore schema order
-        return out.select(*[f.name for f in self.schema.fields])
+        return self.spark.read.schema(self.schema).parquet(*dirs)
 
     def commit(self, df: DataFrame, mode: str = "append") -> int:
         """Write df as a new immutable data dir; publish a new snapshot.
 
         Exactly one Spark action (the write); the row count is read back
-        from the parquet footers into ``self.last_rows``. An empty append
-        publishes a checkpoint-marker snapshot without keeping the dir.
-        An overwrite clears any outstanding equality deletes (the new dir
-        IS the table)."""
+        from the parquet footers into ``self.last_rows``. An empty write
+        publishes a snapshot without keeping the dir, so an empty append
+        is a checkpoint marker."""
         parent = self.current_snapshot()
-        prev_data, prev_deletes = (
-            self._entries(self._manifest(parent)) if parent else ([], [])
-        )
-        snap = parent + 1
-        data_dir = os.path.join(self.dir, f"data-{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").parquet(data_dir)
-        rows = _footer_rows(data_dir)
-        self.last_rows = rows
-        if mode == "append" and rows == 0:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            return self._publish(prev_data, prev_deletes, parent)  # checkpoint marker
-        if mode == "append":
-            return self._publish(
-                prev_data + [[data_dir, snap]], prev_deletes, parent
-            )
-        return self._publish([[data_dir, snap]], [], parent)
+        prev = self._data_dirs(parent) if mode == "append" else []
+        written, self.last_rows = self._write(df)
+        return self._publish(prev + written, parent)
 
     def count_rows(self, snapshot_id: int | None = None) -> int:
-        """Snapshot row count from footers (no Spark job). Falls back to a
-        real count when equality deletes are outstanding (footers can't see
-        anti-joined rows)."""
+        """Snapshot row count from the parquet footers (no Spark job)."""
         snap = self.current_snapshot() if snapshot_id is None else snapshot_id
-        if snap == 0:
-            return 0
-        data, deletes = self._entries(self._manifest(snap))
-        if deletes:
-            return self.read(snap).count()
-        return sum(_footer_rows(d) for d, _ in data)
+        return sum(_footer_rows(d) for d in self._data_dirs(snap))
+
+    def _dirs_holding(self, dirs: list[str], keys: DataFrame, key_cols: list[str]) -> set[str]:
+        """The dirs among ``dirs`` with a row whose key is in ``keys``: one
+        job that scans only the key columns and file paths and collects the
+        few matching paths."""
+        paths = (
+            self.spark.read.schema(self.schema).parquet(*dirs)
+            .select(*key_cols, F.col("_metadata.file_path").alias("__file"))
+            .join(keys, key_cols, "semi")
+            .select("__file")
+            .distinct()
+            .collect()
+        )
+        # the paths are URIs (file:/a%20b/part-0.parquet)
+        held = {os.path.dirname(unquote(urlparse(r[0]).path)) for r in paths}
+        return {d for d in dirs if os.path.abspath(d) in held}
 
     def merge_upsert(self, new: DataFrame, key_cols: list[str]) -> int:
         """MERGE INTO ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT,
-        merge-on-read: append ``new`` + an equality-delete file holding the
-        matched keys; never rewrites the table (O(round) disk writes, the
-        only shape that survives a 100 TB table re-upserted every round).
+        copy-on-write: the data dirs holding a key of ``new`` are rewritten
+        without those keys' rows as one new dir, ``new`` is written as
+        another, and one snapshot publishes both beside every untouched dir.
+        Old snapshots keep their dirs, so time travel sees the old rows.
 
-        The matched-keys job scans ONLY the key columns of the current
-        snapshot (parquet column pruning); when nothing matches — e.g.
-        every round of a single crawl run, where url_seen guarantees a page
-        is extracted once — no delete file is published and ``read`` stays
-        a flat scan. Self-compacts once deletes exceed MOR_COMPACT_DELETES.
-        """
+        The matched-dirs job scans ONLY the key columns and file paths of
+        the current snapshot (parquet column pruning); when nothing matches
+        the merge is a plain append. ``last_rows`` is the row count of
+        ``new``."""
         parent = self.current_snapshot()
-        prev_data, prev_deletes = (
-            self._entries(self._manifest(parent)) if parent else ([], [])
-        )
-        snap = parent + 1
-        # `new` is deliberately NOT cached: the matched-keys job reads only
-        # the key columns (Catalyst prunes the rest, skipping e.g. the
-        # embedding UDF), so recomputation is cheaper than materializing
-        # the full rows twice.
-        deletes = prev_deletes
-        if prev_data:
-            matched = (
-                self.read()
-                .select(*key_cols)
-                .distinct()
-                .join(new.select(*key_cols).distinct(), key_cols, "semi")
+        prev = self._data_dirs(parent)
+        # `new` is deliberately NOT cached: the matched-dirs and rewrite
+        # jobs read only its key columns (Catalyst prunes the rest, skipping
+        # e.g. the embedding UDF), so recomputation is cheaper than
+        # materializing the full rows twice.
+        keys = new.select(*key_cols).distinct()
+        touched = self._dirs_holding(prev, keys, key_cols) if prev else set()
+        dirs = [d for d in prev if d not in touched]
+        if touched:
+            kept = (
+                self.spark.read.schema(self.schema).parquet(*sorted(touched))
+                .join(keys, key_cols, "left_anti")
+                .select(*self.schema.names)
             )
-            del_dir = os.path.join(self.dir, f"delete-{uuid.uuid4().hex[:12]}")
-            matched.write.mode("overwrite").parquet(del_dir)
-            if _footer_rows(del_dir) == 0:
-                shutil.rmtree(del_dir, ignore_errors=True)
-            else:
-                deletes = prev_deletes + [[del_dir, snap, list(key_cols)]]
-        data_dir = os.path.join(self.dir, f"data-{uuid.uuid4().hex[:12]}")
-        new.write.mode("overwrite").parquet(data_dir)
-        rows = _footer_rows(data_dir)
-        self.last_rows = rows
-        if rows == 0:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            out = self._publish(prev_data, deletes, parent)
-        else:
-            out = self._publish(prev_data + [[data_dir, snap]], deletes, parent)
-        if len(deletes) >= MOR_COMPACT_DELETES:
-            # amortized: fold deletes back into a flat table
-            out = self.compact()
-        return out
+            dirs += self._write(kept)[0]
+        written, self.last_rows = self._write(new)
+        return self._publish(dirs + written, parent)
 
     def compact(self) -> int:
         """Maintenance rewrite (Iceberg ``rewrite_data_files``): publish one
-        flat data dir with all outstanding equality deletes applied —
-        bin-packs the per-round append dirs and zeroes the read-side
-        anti-joins. ``merge_upsert`` calls this automatically past
-        MOR_COMPACT_DELETES; call it explicitly between crawl runs to keep
-        file counts bounded on long-lived tables. Old snapshots keep their
-        dirs, so time travel across the compaction still works."""
+        flat data dir with the snapshot's rows, bin-packing the per-round
+        append dirs. Call it between crawl runs to keep file counts bounded
+        on long-lived tables. Old snapshots keep their dirs, so time travel
+        across the compaction still works."""
         return self.commit(self.read(), mode="overwrite")
 
     def delete_where(self, condition) -> int:
@@ -298,15 +255,13 @@ def upsert_chunks_with_stale_delete(
     (qdrant.rs:130-139,180-186): for every source_url present in the new
     batch, rows with a different page_version are dropped.
 
-    Implemented as a merge-on-read equality delete on ``source_url``: a
-    page's chunk set is a pure function of (url, content) — page_version is
-    the content hash and point_id is UUIDv5(url, version, index)
-    (functions/text.py:125,138) — so "drop other-version rows, dedup same
-    point_ids, append the new batch" is row-for-row identical to "drop ALL
-    of the url's old rows, append the new batch" (a same-version re-crawl
-    re-appends byte-identical rows). The rewrite variant this replaced
-    re-wrote the ENTIRE chunks table every round — O(table) disk per
-    round; the merge appends O(round) bytes plus a keys file, and inside a
-    single crawl run (url_seen: each page extracted once) no delete file
-    at all."""
+    Implemented as a merge keyed on ``source_url``: a page's chunk set is
+    a pure function of (url, content) — page_version is the content hash
+    and point_id is UUIDv5(url, version, index) (functions/text.py:125,138)
+    — so "drop other-version rows, dedup same point_ids, append the new
+    batch" is row-for-row identical to "drop ALL of the url's old rows,
+    append the new batch" (a same-version re-crawl re-appends
+    byte-identical rows). Only the data dirs holding a re-crawled url are
+    rewritten; inside a single crawl run (url_seen: each page extracted
+    once) none is, and the merge is an append."""
     return chunks_table.merge_upsert(new_chunks, ["source_url"])

@@ -23,7 +23,6 @@ ALLOWED_ENV = {
     "SPARK_GRAFT_SHUFFLE_PARTITIONS",
     "SPARK_GRAFT_DRIVER_MEM",
     "SPARK_GRAFT_UI",
-    "SPARK_GRAFT_MOR_COMPACT",
 }
 
 

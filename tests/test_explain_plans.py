@@ -226,6 +226,19 @@ def test_admit_links_broadcasts_round_control(spark):
     ]
 
 
+def test_admit_links_canonicalizes_each_link_once(spark):
+    """The canonical url is the generator's output, so no filter is pushed
+    beneath it with the canonicalize_url tree substituted into each
+    conjunct: the executed plan carries that tree (its 3 regexp_extract
+    nodes) once. The tree holds its origin, and so the https default-port
+    regex, twice; with a filter pushed beneath it the plan held 5 trees."""
+    from my_crawler_spark.operators.frontier import admit_links
+
+    out = admit_links(*_admit_links_inputs(spark), spark)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count(r":443\z") == 2, plan
+
+
 def test_hamming_near_pairs_single_upstream_pass(spark):
     """The pigeonhole Hamming join must run its (possibly expensive)
     upstream plan once per join side — posexplode + ONE self-join, not a

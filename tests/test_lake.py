@@ -39,21 +39,6 @@ def test_read_without_data_starts_no_task(spark, tmp_path):
         t.commit(spark.createDataFrame([], SCHEMA))
 
 
-def test_read_with_deletes_starts_no_job(spark, tmp_path):
-    """A read of a table with an equality-delete file starts no Spark job:
-    the delete file is read with the key columns' schema taken from the
-    table's, so Parquet schema inference does not run."""
-    t = SnapshotTable(spark, str(tmp_path), "t5", SCHEMA)
-    t.commit(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))
-    t.merge_upsert(spark.createDataFrame([(2, "B"), (3, "c")], SCHEMA), ["k"])
-    assert any(d.startswith("delete-") for d in os.listdir(t.dir))
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    df = t.read()
-    assert dag.nextJobId() == before
-    assert sorted((r.k, r.v) for r in df.collect()) == [(1, "a"), (2, "B"), (3, "c")]
-
-
 def test_overwrite(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path), "t2", SCHEMA)
     t.commit(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))
@@ -106,29 +91,96 @@ def test_catalog_reuse(spark, tmp_path):
     assert c.table("x", SCHEMA) is c.table("x", SCHEMA)
 
 
-# -- merge-on-read (Iceberg v2 equality deletes) -----------------------------
+# -- copy-on-write merges -----------------------------------------------------
 
 
 def _manifest(t: SnapshotTable, snap: int | None = None) -> dict:
     return t._manifest(snap if snap is not None else t.current_snapshot())
 
 
-def test_merge_is_merge_on_read_not_rewrite(spark, tmp_path):
-    """A merge APPENDS (data dir + equality-delete keys); the original data
-    dir survives untouched — O(round) disk, never an O(table) rewrite."""
-    t = SnapshotTable(spark, str(tmp_path), "t5", SCHEMA)
-    s1 = t.commit(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))
-    dirs_before = [d for d, _ in t._entries(_manifest(t))[0]]
-    s2 = t.merge_upsert(spark.createDataFrame([(2, "B"), (3, "c")], SCHEMA), ["k"])
-    data, deletes = t._entries(_manifest(t))
-    assert dirs_before[0] == data[0][0], "original data dir must survive a merge"
-    assert len(data) == 2 and len(deletes) == 1
-    assert deletes[0][2] == ["k"] and deletes[0][1] == s2
-    assert {r.k: r.v for r in t.read().collect()} == {1: "a", 2: "B", 3: "c"}
-    # time travel: the pre-merge snapshot still shows the old row
-    assert {r.k: r.v for r in t.read(snapshot_id=s1).collect()} == {1: "a", 2: "b"}
-    # footer fallback: count must see through the anti-join
-    assert t.count_rows() == 3
+def _matched_merge(spark, tmp_path, name):
+    """Two append dirs, then a merge whose only matched key sits in the
+    first -> (table, pre-merge snapshot, dirs before, dirs after)."""
+    t = SnapshotTable(spark, str(tmp_path), name, SCHEMA)
+    t.commit(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))
+    s2 = t.commit(spark.createDataFrame([(5, "e")], SCHEMA))
+    before = t._entries(_manifest(t))[0]
+    t.merge_upsert(spark.createDataFrame([(2, "B"), (3, "c")], SCHEMA), ["k"])
+    return t, s2, before, t._entries(_manifest(t))[0]
+
+
+def test_merge_rewrites_only_dirs_holding_a_match(spark, tmp_path):
+    """A matched merge rewrites the dir holding k=2 (minus that row) and
+    appends the new rows; the untouched dir keeps its path, and the
+    pre-merge snapshot still time-travels to the old rows."""
+    t, s2, before, after = _matched_merge(spark, tmp_path, "t5")
+    assert before[1] in after, "a dir with no matched key must survive a merge"
+    assert before[0] not in after and len(after) == 3
+    assert os.path.isdir(before[0]), "old snapshots keep their dirs"
+    assert t.last_rows == 2
+    assert {r.k: r.v for r in t.read().collect()} == {1: "a", 2: "B", 3: "c", 5: "e"}
+    assert {r.k: r.v for r in t.read(snapshot_id=s2).collect()} == {1: "a", 2: "b", 5: "e"}
+
+
+def test_read_after_matched_merge_is_one_flat_scan(spark, tmp_path):
+    """Deletes are applied at write time: a read after a matched merge
+    starts no job and plans one file scan with no join and no union."""
+    t = _matched_merge(spark, tmp_path, "t5b")[0]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df = t.read()
+    assert dag.nextJobId() == before
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+    assert "Join" not in plan and "Union" not in plan
+
+
+def test_count_rows_starts_no_job(spark, tmp_path):
+    t = _matched_merge(spark, tmp_path, "t5c")[0]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    assert t.count_rows() == 4
+    assert dag.nextJobId() == before
+
+
+def test_snapshot_with_delete_files_fails_loudly(spark, tmp_path):
+    """A manifest that still lists equality-delete files (written by the
+    earlier merge-on-read layer) is refused rather than read without its
+    deletes; a v1 manifest (data_dirs only) reads as before."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(spark, str(tmp_path), "legacy", SCHEMA)
+    data = os.path.join(t.dir, "data-v1")
+    os.makedirs(data)
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), os.path.join(data, "p.parquet"))
+    manifests = [
+        {"snapshot": 1, "parent": 0, "data_dirs": [data]},
+        {"snapshot": 2, "parent": 1, "data": [[data, 1]], "data_dirs": [data],
+         "deletes": [[os.path.join(t.dir, "delete-x"), 2, ["k"]]]},
+    ]
+    for m in manifests:
+        with open(os.path.join(t.dir, f"v{m['snapshot']}.json"), "w") as f:
+            json.dump(m, f)
+    with open(os.path.join(t.dir, "CURRENT"), "w") as f:
+        f.write("2")
+    for call in (
+        t.read,
+        t.count_rows,
+        lambda: t.merge_upsert(spark.createDataFrame([(2, "B")], SCHEMA), ["k"]),
+        lambda: t.commit(spark.createDataFrame([(3, "c")], SCHEMA)),
+    ):
+        try:
+            call()
+        except ValueError as e:
+            assert "delete" in str(e)
+        else:
+            raise AssertionError("a snapshot with delete files must not read")
+    assert t.current_snapshot() == 2, "nothing was published"
+    assert t.count_rows(1) == 2
+    assert sorted((r.k, r.v) for r in t.read(1).collect()) == [(1, "a"), (2, "b")]
 
 
 def test_merge_without_matches_stays_flat_scan(spark, tmp_path):
@@ -153,19 +205,6 @@ def test_merge_chain_and_delete_scoping(spark, tmp_path):
     t.merge_upsert(spark.createDataFrame([(2, "B")], SCHEMA), ["k"])   # delete k=2
     got = {r.k: r.v for r in t.read().collect()}
     assert got == {1: "A", 2: "B"}, "k=1 re-inserted AFTER its delete must survive"
-
-
-def test_mor_compaction_folds_deletes(spark, tmp_path, monkeypatch):
-    import my_crawler_spark.sources.lake as lake
-
-    monkeypatch.setattr(lake, "MOR_COMPACT_DELETES", 2)
-    t = SnapshotTable(spark, str(tmp_path), "t8", SCHEMA)
-    t.commit(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], SCHEMA))
-    t.merge_upsert(spark.createDataFrame([(1, "A")], SCHEMA), ["k"])
-    t.merge_upsert(spark.createDataFrame([(2, "B")], SCHEMA), ["k"])  # hits 2 -> compact
-    data, deletes = t._entries(_manifest(t))
-    assert deletes == [] and len(data) == 1, "compaction folds back to one flat dir"
-    assert {r.k: r.v for r in t.read().collect()} == {1: "A", 2: "B", 3: "c"}
 
 
 def test_chunks_mor_equals_rewrite_semantics(spark, tmp_path):
@@ -213,17 +252,15 @@ def test_chunks_mor_equals_rewrite_semantics(spark, tmp_path):
 
 
 def test_explicit_compact_binpacks_and_keeps_time_travel(spark, tmp_path):
-    """compact() folds N append dirs + deletes into ONE flat dir with the
-    same rows; pre-compaction snapshots still time-travel."""
+    """compact() folds N append dirs into ONE flat dir with the same rows;
+    pre-compaction snapshots still time-travel."""
     t = SnapshotTable(spark, str(tmp_path), "t9", SCHEMA)
     t.commit(spark.createDataFrame([(1, "a")], SCHEMA))
     t.commit(spark.createDataFrame([(2, "b")], SCHEMA))
     s3 = t.merge_upsert(spark.createDataFrame([(1, "A"), (3, "c")], SCHEMA), ["k"])
+    assert len(t._entries(_manifest(t))[0]) == 2  # k=1's dir emptied, dropped
     t.compact()
-    data, deletes = t._entries(_manifest(t))
-    assert len(data) == 1 and deletes == []
+    assert len(t._entries(_manifest(t))[0]) == 1
     assert {r.k: r.v for r in t.read().collect()} == {1: "A", 2: "b", 3: "c"}
     # pre-compaction snapshot unchanged
     assert {r.k: r.v for r in t.read(snapshot_id=s3).collect()} == {1: "A", 2: "b", 3: "c"}
-    plan = t.read()._jdf.queryExecution().executedPlan().toString()
-    assert "Anti" not in plan and "Union" not in plan
